@@ -16,10 +16,12 @@ A long-lived session releases them explicitly::
         df = queries()["q_dedup_minhash"](spark, sf_dir); df.collect()
     # all index caches released here
 
-or calls ``release_caches()`` (idempotent). ``spark.catalog
-.clearCache()`` still works (bench.py uses it after every
-measurement); one-shot drivers (this contract's usage) never
-accumulate more than one query's indexes either way.
+or calls ``release_caches()`` (idempotent). Harnesses that run many
+queries in one session use the two lifecycle boundaries in ``caching``:
+``release_session_caches(spark)`` after each measurement, and
+``reset_session_state(spark)`` when the next query must also rebuild
+every staged artifact, as a fresh session would. One-shot drivers (this
+contract's usage) never accumulate more than one query's indexes.
 """
 
 from __future__ import annotations

@@ -17,15 +17,17 @@ Protocol (r6, VERDICT r5 items 3+5):
 - Staged-expectation queries time their BUILDER frame (the real
   pipeline) — the oracle-plumbing write+re-read that polluted r5's
   minhash/bpe numbers is not part of the measured query.
-- Session memos (staged expectations, the shared resolve) clear between
-  repeats, so every repeat pays what a fresh session would; WITHIN a
-  repeat the memo reuse is deliberate (resolve computes once, its three
-  consumers read the staged artifact — the production shape).
+- Session state follows the two boundaries in ``caching``:
+  ``release_session_caches`` after every query (no query borrows a
+  predecessor's index cache or checkpoint blocks), and
+  ``reset_session_state`` after every repeat (the staged memo clears, so
+  each repeat pays what a fresh session would). WITHIN a repeat the memo
+  reuse is deliberate: resolve computes once and its three consumers
+  read the staged artifact, the production shape.
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import statistics
@@ -34,11 +36,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from dateng_data_lakes_apache_spark_spark.caching import release_caches
-from dateng_data_lakes_apache_spark_spark.operators.dedup import clear_resolve_memo
+from dateng_data_lakes_apache_spark_spark.caching import (
+    release_session_caches,
+    reset_session_state,
+)
 from dateng_data_lakes_apache_spark_spark.registry import get_queries
 from dateng_data_lakes_apache_spark_spark.session import get_spark
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS, clear_stage_memo
+from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
 # The headline set: every operator family is represented (scan/filter,
 # join ladder incl. asof, agg incl. rollup, the window family, sort,
@@ -384,21 +388,8 @@ def main() -> None:
             t0 = time.perf_counter()
             execute_fully(fn(spark, sf_dir))
             runs[name].append(time.perf_counter() - t0)
-            # Queries that persist index tables (LSH bands, bucket indexes)
-            # own their cache only for the run — clear between measurements so
-            # blocks don't accumulate and no query borrows a predecessor's cache.
-            release_caches()
-            spark.catalog.clearCache()
-            # localCheckpoint blocks (pagerank, resolve, BPE rounds) unpin only
-            # when the DRIVER's DataFrame refs die and ContextCleaner runs —
-            # clearCache can't reach them. Drop the refs explicitly so a long
-            # headline doesn't accumulate block-manager pressure that inflates
-            # late heavyweights.
-            gc.collect()
-        # Every repeat pays fresh-session costs: memoized staged artifacts
-        # and the shared resolve would otherwise make repeats 2+ trivial.
-        clear_stage_memo()
-        clear_resolve_memo()
+            release_session_caches(spark)
+        reset_session_state(spark)
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in runs.items()}
     detail = {

@@ -17,7 +17,8 @@ Layout
 - ``operators/`` relational operator builders (scan/filter/join/agg/window/...)
 - ``functions/`` scalar & vector function packs (string/date/math/json/array)
 - ``sources/``   schema-applied readers (JSON/CSV/Parquet) + lake sinks
-- ``plans/``     plan-inspection helpers (explain, shuffle counting)
+- ``plans/``     plan-inspection helpers (formatted explain, scan read
+                 schema, normalized plan snapshots)
 - ``streaming/`` Structured Streaming queries (tumbling/session/dedup)
 - ``pipelines/`` the reference's star-schema ETL as a library feature
 """

@@ -232,8 +232,8 @@ def q_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked row for the API surface itself. numpy math on the raw
     Arrow buffers keeps totals engine-exact.
 
-    Measured cost floor (r10 A/B, tools/cogroup_batch_probe.py —
-    BASELINE.md "Arrow-batch / partition-count A/B"): per-GROUP Python
+    Measured cost floor (r10 A/B, BASELINE.md "q_cogroup_reconcile
+    Arrow-batch / partition-count A/B"): per-GROUP Python
     dispatch. ``arrow.maxRecordsPerBatch`` is a no-op for this shape
     (one kernel call per key regardless); partition count is one knob —
     fewer partitions amortize Python-worker spin-up over more groups

@@ -18,10 +18,10 @@ from ..caching import local_checkpoint, release_superseded, track
 from ..catalog import table
 from ..common import spread
 from ..registry import query
+from ..staging import clear_stage_memo as clear_resolve_memo  # noqa: F401 (perfbench imports it)
 from ..staging import (
-    repoint_current,
     run_staged,
-    stage_expectation,
+    run_staged_index,
     staged_builder,
     staged_oracle,
     staged_path_sql,
@@ -458,19 +458,6 @@ def staged_resolve_cte() -> str:
 """
 
 
-#: Session-level memo for the resolve deliverable: (applicationId,
-#: sf_dir) → re-read of the staged table. The memoized frame is a plain
-#: parquet scan of staged bytes, so it survives any cache release (no
-#: lineage into checkpoint blocks).
-_RESOLVE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_resolve_memo() -> None:
-    """Drop the memoized resolve (bench repeats call this so every
-    repeat pays the full resolve pipeline like a fresh session)."""
-    _RESOLVE_MEMO.clear()
-
-
 def resolved_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compute-once-per-session dedup resolve: (doc_id, keeper_doc_id,
     is_dup), staged to parquet and memoized.
@@ -484,17 +471,7 @@ def resolved_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     At lake scale this staged table IS the resolve artifact a pipeline
     would persist between the dedup stage and its consumers.
     """
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.normpath(sf_dir))
-    got = _RESOLVE_MEMO.get(key)
-    if got is not None:
-        repoint_current("dedup_resolve", sf_dir)
-        return got
-    out = _build_resolve(spark, sf_dir)
-    staged = stage_expectation(out, "dedup_resolve", sf_dir)
-    _RESOLVE_MEMO[key] = staged
-    return staged
+    return run_staged_index(spark, sf_dir, "dedup_resolve", _build_resolve)
 
 
 @query(

@@ -250,7 +250,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda k: F.md5(F.concat_ws(" ", F.slice(words, k * _SPAN + 1, _SPAN))),
     )
     # spans feeds both the frequency agg and the probe side; persist so the
-    # scan+shingle work runs once (cache lifecycle: bench.py clearCache()).
+    # scan+shingle work runs once (released by caching.release_session_caches).
     spans = track(d.select("doc_id", F.explode(span_hashes).alias("h")))
     freq = spans.groupBy("h").agg(F.count_distinct("doc_id").alias("nd"))
     dup = F.sum(F.when(F.col("nd") > 1, 1).otherwise(0))

@@ -462,7 +462,7 @@ def embedding_lsh_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.embedding").alias("emb_b"),
         )
         # Dedup-BEFORE-score is load-bearing here (r12 negative A/B,
-        # tools/lsh_pair_ab_probe.py): pairs collide in ~9 of the LSH
+        # OPTIMIZATION_r12.md item 10): pairs collide in ~9 of the LSH
         # tables on average, so scoring each occurrence first (the
         # q_dedup_minhash verify-before-dedup shape) multiplies the
         # 64-dim triple cosine fold by the dup factor — 6.2 → 53.8 s at
@@ -839,7 +839,7 @@ def knn_graph_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.embedding").alias("emb_b"),
         )
         # Dedup-BEFORE-score, same r12 negative A/B as
-        # embedding_lsh_frame (tools/lsh_pair_ab_probe.py): score-first
+        # embedding_lsh_frame (OPTIMIZATION_r12.md item 10): score-first
         # 13.3 → 54.1 s (multi-table dup factor × cosine fold); narrow-id
         # dedup + embedding re-join flat (11.0 → 10.8, within spread).
         .dropDuplicates(["vec_a", "vec_b"])

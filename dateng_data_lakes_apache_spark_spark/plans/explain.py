@@ -1,7 +1,8 @@
 """Plan-inspection helpers: assert the physical plan is the one you want.
 
 Used by tests/test_plans.py to enforce the engine's scale posture —
-pushdown reached the scan, small dims broadcast, top-k never global-sorts.
+pushdown reached the scan, small dims broadcast, top-k never global-sorts
+— and by the plan snapshots and plan lint.
 """
 
 from __future__ import annotations
@@ -14,26 +15,6 @@ def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
         df._jdf.queryExecution(), "formatted"
     )
-
-
-def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the physical plan."""
-    return formatted_plan(df).count("Exchange hashpartitioning") + formatted_plan(df).count(
-        "Exchange rangepartitioning"
-    )
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    """True if ``fragment`` appears in the scan's PushedFilters list."""
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "PushedFilters" in line and fragment in line:
-            return True
-    return False
 
 
 def scan_read_schema(df: DataFrame) -> list[str]:

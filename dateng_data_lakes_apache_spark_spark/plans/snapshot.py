@@ -172,19 +172,17 @@ def snapshot_frame(spark, sf_dir: str, name: str):
 
 def generate(spark, sf_dir: str = SNAPSHOT_SF_DIR) -> dict[str, str]:
     """(name → normalized plan text) for every snapshot query."""
-    from ..caching import release_caches
+    from ..caching import release_session_caches
 
     # Plans are cache-state-sensitive (a pre-materialized index swaps a
     # scan subtree for InMemoryTableScan); snapshot from a clean slate.
-    release_caches()
-    spark.catalog.clearCache()
+    release_session_caches(spark)
     out = {}
     for name in SNAPSHOT_QUERIES:
         out[name] = normalized_plan(snapshot_frame(spark, sf_dir, name))
         # A builder that track()-persists its index must not leave that
         # cache to perturb the NEXT query's pinned plan.
-        release_caches()
-        spark.catalog.clearCache()
+        release_session_caches(spark)
     return out
 
 

@@ -56,9 +56,10 @@ _EXPECTED_ROOT = os.path.join(SCRATCH, "expected")
 STAGED_BUILDERS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 #: (applicationId, name, normpath(sf_dir)) → re-read of the staged
-#: bytes. A session builds+stages each expectation once; later calls
-#: re-aim the ``current`` pointer and return the memoized scan — the
-#: same compute-once contract resolved_clusters established in r5.
+#: bytes: the package's one cross-call frame memo. A session builds and
+#: stages each artifact once; later calls re-aim the ``current`` pointer
+#: and return the memoized scan. ``caching.reset_session_state`` clears
+#: it, so the next call pays what a fresh session pays.
 _STAGE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
@@ -78,14 +79,7 @@ def run_staged(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The registered query delegates here; the builder itself stays
     separately callable so guards and bench can target the real plan.
     """
-    key = (spark.sparkContext.applicationId, name, os.path.normpath(sf_dir))
-    got = _STAGE_MEMO.get(key)
-    if got is not None:
-        repoint_current(name, sf_dir)
-        return got
-    staged = stage_expectation(STAGED_BUILDERS[name](spark, sf_dir), name, sf_dir)
-    _STAGE_MEMO[key] = staged
-    return staged
+    return run_staged_index(spark, sf_dir, name, STAGED_BUILDERS[name])
 
 
 def run_staged_index(
@@ -94,20 +88,21 @@ def run_staged_index(
     name: str,
     builder: Callable[[SparkSession, str], DataFrame],
 ) -> DataFrame:
-    """Session-memoized INTERNAL ingest index (VERDICT r11 item 2).
+    """Build ``builder``'s frame once per (session, name, sf), pin it to
+    parquet and memoize the re-read.
 
-    Same build-once / pin-to-parquet / re-read mechanics as
-    :func:`run_staged`, but for indexes that are an engine-internal
-    artifact (e.g. the vector-validity-filtered embeddings table), not a
-    staged ORACLE expectation — so the builder is passed explicitly and
-    never registered in :data:`STAGED_BUILDERS` (that registry is pinned
-     1:1 to ``staged_oracle`` queries by tests/test_staged_expectations).
-    The memo is the same `_STAGE_MEMO`, so bench repeats pay a fresh
-    build exactly like staged expectations do (``clear_stage_memo``).
+    :func:`run_staged` delegates here with its registered builder; the
+    engine-internal indexes (the vector-validity-filtered embeddings, the
+    shared dedup resolve) pass theirs explicitly and stay out of
+    :data:`STAGED_BUILDERS`, which tests/test_staged_expectations pins
+    1:1 to ``staged_oracle`` queries. A memo hit re-aims ``current`` so
+    an interleaved-sf session always has the pointer matching the sf
+    about to be oracled.
     """
     key = (spark.sparkContext.applicationId, name, os.path.normpath(sf_dir))
     got = _STAGE_MEMO.get(key)
     if got is not None:
+        repoint_current(name, sf_dir)
         return got
     staged = stage_expectation(builder(spark, sf_dir), name, sf_dir)
     _STAGE_MEMO[key] = staged
@@ -115,8 +110,8 @@ def run_staged_index(
 
 
 def clear_stage_memo() -> None:
-    """Drop all memoized staged frames (bench repeats call this so every
-    repeat pays the same build+stage cost as a fresh session)."""
+    """Drop all memoized staged frames; callers outside this package use
+    ``caching.reset_session_state``."""
     _STAGE_MEMO.clear()
 
 
@@ -140,40 +135,37 @@ def stage_expectation(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
     staged expectation is a candidate-pair set / sketch summary /
     audit row, orders of magnitude below the input.
     """
-    spark = df.sparkSession
-    out = os.path.join(_EXPECTED_ROOT, name, _sf_tag(sf_dir))
+    out = _stage_dir(name, sf_dir)
     df.coalesce(4).write.mode("overwrite").parquet(out)
-    # Atomic pointer swap: symlink to a temp name, rename over `current`.
-    # os.replace is atomic on POSIX, so the oracle never sees a missing
-    # or half-written pointer.
-    cur = os.path.join(_EXPECTED_ROOT, name, "current")
-    tmp = cur + f".tmp.{os.getpid()}"
-    if os.path.lexists(tmp):
-        os.remove(tmp)
-    os.symlink(out, tmp)
-    os.replace(tmp, cur)
-    return spark.read.parquet(out)
+    repoint_current(name, sf_dir)
+    return df.sparkSession.read.parquet(out)
+
+
+def _stage_dir(name: str, sf_dir: str) -> str:
+    return os.path.join(_EXPECTED_ROOT, name, _sf_tag(sf_dir))
+
+
+def _current(name: str) -> str:
+    return os.path.join(_EXPECTED_ROOT, name, "current")
 
 
 def repoint_current(name: str, sf_dir: str) -> None:
-    """Re-aim the ``current`` pointer at ``sf_dir``'s staged bytes without
-    rewriting them — used by memoized builders (resolved_clusters) so an
-    interleaved-sf session always has the pointer matching the sf about
-    to be oracled."""
-    out = os.path.join(_EXPECTED_ROOT, name, _sf_tag(sf_dir))
-    cur = os.path.join(_EXPECTED_ROOT, name, "current")
+    """Aim the ``current`` pointer that the oracle SQL reads at
+    ``sf_dir``'s staged bytes. Atomic: symlink to a temp name, then
+    rename over ``current`` (os.replace is atomic on POSIX), so the
+    oracle never sees a missing or half-written pointer."""
+    cur = _current(name)
     tmp = cur + f".tmp.{os.getpid()}"
     if os.path.lexists(tmp):
         os.remove(tmp)
-    os.symlink(out, tmp)
+    os.symlink(_stage_dir(name, sf_dir), tmp)
     os.replace(tmp, cur)
 
 
 def staged_path_sql(name: str) -> str:
     """The DuckDB FROM-clause path for ``name``'s staged expectation —
     for embedding inside a larger oracle CTE."""
-    cur = os.path.join(_EXPECTED_ROOT, name, "current")
-    return f"'{cur}/*.parquet'"
+    return f"'{_current(name)}/*.parquet'"
 
 
 def staged_oracle(name: str, select: str) -> str:
@@ -182,5 +174,4 @@ def staged_oracle(name: str, select: str) -> str:
     ``select`` lists the output columns (DuckDB keeps parquet types, so
     no casts are needed — the bytes are Spark-written parquet).
     """
-    cur = os.path.join(_EXPECTED_ROOT, name, "current")
-    return f"SELECT {select} FROM '{cur}/*.parquet'"
+    return f"SELECT {select} FROM {staged_path_sql(name)}"

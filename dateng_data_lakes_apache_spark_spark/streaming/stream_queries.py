@@ -99,49 +99,30 @@ def _stage_events_dir(sf_dir: str) -> str:
     Spark-written DIRECTORY of part files (any real lake layout). Stage
     (hard-link/copy) every data file into a scratch dir once per scale
     factor — on a cluster the source would be the landing directory
-    itself and this step disappears. Re-stages when the source file SET
-    changes: the manifest of every (basename, inode, mtime_ns) is
-    compared, not just the first file — adding/removing part files in a
-    directory-layout table while the lexicographically-first file stays
-    untouched must invalidate the stage too (ADVICE r6)."""
+    itself and this step disappears. Re-stages under the same rule as
+    the other events stagings (:func:`_events_manifest`): adding or
+    removing part files while the lexicographically-first file stays
+    untouched must invalidate the stage too (ADVICE r6). Hard-linked
+    stage files share the source inode/mtime, so the manifest also
+    proves the staged copies themselves are current."""
     src = table_path(sf_dir, "events")
-    if os.path.isdir(src):
-        srcs = sorted(
-            os.path.join(src, n)
-            for n in os.listdir(src)
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        )
-    else:
-        srcs = [src]
     tag = os.path.basename(os.path.normpath(sf_dir))
     stage_dir = os.path.join(_SCRATCH, "stream_src", tag)
-    manifest_path = os.path.join(stage_dir, "_manifest.json")
-    manifest = [
-        # basename + inode + mtime identifies the file set; hard-linked
-        # stage files share the inode/mtime, so the manifest also proves
-        # the staged copies themselves are current.
-        [os.path.basename(s), os.stat(s).st_ino, os.stat(s).st_mtime_ns]
-        for s in srcs
-    ]
-    if os.path.exists(manifest_path):
+    marker = os.path.join(stage_dir, "_manifest.json")
+    manifest = _events_manifest(sf_dir)
+    if not _marker_stale(marker, manifest):
+        return stage_dir
+    shutil.rmtree(stage_dir, ignore_errors=True)
+    os.makedirs(stage_dir, exist_ok=True)
+    srcs = [os.path.join(src, m[0]) for m in manifest] if os.path.isdir(src) else [src]
+    for i, s in enumerate(srcs):
+        staged = os.path.join(stage_dir, f"events-{i:03d}.parquet")
         try:
-            with open(manifest_path) as fh:
-                stale = json.load(fh) != manifest
-        except (OSError, ValueError):
-            stale = True
-        if stale:
-            shutil.rmtree(stage_dir, ignore_errors=True)
-    if not os.path.exists(manifest_path):
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        os.makedirs(stage_dir, exist_ok=True)
-        for i, s in enumerate(srcs):
-            staged = os.path.join(stage_dir, f"events-{i:03d}.parquet")
-            try:
-                os.link(s, staged)
-            except OSError:
-                shutil.copyfile(s, staged)
-        with open(manifest_path, "w") as fh:
-            json.dump(manifest, fh)
+            os.link(s, staged)
+        except OSError:
+            shutil.copyfile(s, staged)
+    with open(marker, "w") as fh:
+        json.dump(manifest, fh)
     return stage_dir
 
 

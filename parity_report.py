@@ -14,9 +14,13 @@ Timing protocol v2 (VERDICT r6 item 7): the session is warmed before
 the sweep (the r6 record charged ~17 s of JVM/codegen warm-up to the
 first query), and each entry carries ``sec_spark_median`` /
 ``sec_spark_spread`` from SPARK_GRAFT_PARITY_REPEATS (default 3)
-repeats of the Spark side with stage memos and the Spark cache cleared
-between repeats (every repeat pays fresh-session costs, same as
-bench.py). ``sec`` remains the single-shot end-to-end compare time
+repeats of the Spark side. ``caching.reset_session_state`` runs after
+the warm-up, before every repeat and after every query, so each repeat
+pays what a fresh session pays: the shared dedup resolve is rebuilt
+even for its consumers (q_dedup_cluster_stats, q_dedup_rate_by_source,
+q_split_by_cluster). That is stricter than bench.py, which resets only
+between passes and lets the consumers read the resolve built earlier in
+the same pass. ``sec`` remains the single-shot end-to-end compare time
 (Spark + DuckDB + canonicalization) for continuity; round-over-round
 comparisons should use the medians.
 
@@ -46,9 +50,10 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
 
+from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
 from dateng_data_lakes_apache_spark_spark.registry import get_oracles, get_queries
 from dateng_data_lakes_apache_spark_spark.session import get_spark
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS, clear_stage_memo
+from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 from parity import _canon_frame, duck_connection
 
 #: staged table name → the query whose independent oracle re-derives it
@@ -78,8 +83,7 @@ def main() -> None:
     # Warm the JVM/codegen/file-listing paths so the first swept query
     # doesn't absorb session start-up into its recorded time.
     queries["q_scan_project"](spark, sf_dir).toPandas()
-    spark.catalog.clearCache()
-    clear_stage_memo()
+    reset_session_state(spark)
 
     report: dict[str, dict] = {}
     t_start = time.time()
@@ -117,8 +121,7 @@ def main() -> None:
             # single-shot end-to-end compare time (continuity with the
             # pre-v2 records) — captured BEFORE the timing repeats
             entry["sec"] = round(time.time() - t0, 2)
-            # timing repeats: every repeat pays fresh-session costs
-            # (stage memos + Spark cache cleared), same as bench.py —
+            # timing repeats: every repeat pays fresh-session costs,
             # and, like bench, staged queries time their BUILDER frame
             # so expectation-staging I/O stays out of the measured path
             fn_timed = STAGED_BUILDERS.get(name)
@@ -130,8 +133,7 @@ def main() -> None:
             else:
                 fn_timed, n_runs = fn, max(0, repeats - 1)
             for _ in range(n_runs):
-                spark.catalog.clearCache()
-                clear_stage_memo()
+                reset_session_state(spark)
                 t_run = time.time()
                 fn_timed(spark, sf_dir).toPandas()
                 spark_times.append(time.time() - t_run)
@@ -143,8 +145,7 @@ def main() -> None:
             traceback.print_exc(file=sys.stderr)
         entry.setdefault("sec", round(time.time() - t0, 2))
         report[name] = entry
-        spark.catalog.clearCache()
-        clear_stage_memo()
+        reset_session_state(spark)
         ok = entry.get("values_match", entry.get("spark_rows") is not None)
         print(f"{name}: {'OK' if ok and not entry['err'] else 'FAIL'} ({entry['sec']}s)", flush=True)
 

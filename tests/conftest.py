@@ -7,8 +7,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
 from dateng_data_lakes_apache_spark_spark.session import get_spark
-from dateng_data_lakes_apache_spark_spark.staging import clear_stage_memo
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
@@ -26,23 +26,19 @@ def sf_dir():
 
 
 @pytest.fixture(autouse=True, scope="module")
-def _fresh_stage_memo():
-    """Isolate staging's per-(session, name, sf) memo across test modules.
+def _fresh_session_state(spark):
+    """Start every test module from a fresh session state.
 
     Without this, a module that monkeypatches an operator's catalog and
-    drives a run_staged-delegating query can silently receive the staged
-    table another module built over the REAL corpus (or poison the memo
-    for later modules) — the order-dependent failure VERDICT r9 flagged
-    in test_simhash_hamming_separation.  Clearing per module makes suite
-    results independent of collection order; the staged parquet itself
-    is content-addressed, so a re-stage within one session is cheap.
-    dedup's resolved_clusters keeps an equivalent private memo — clear
-    both (they are the only two cross-call frame caches in the package).
+    drives a memoized staged query (run_staged, resolved_clusters) can
+    silently receive the staged table another module built over the REAL
+    corpus (or poison the memo for later modules) — the order-dependent
+    failure VERDICT r9 flagged in test_simhash_hamming_separation.
+    ``reset_session_state`` clears the package's one frame memo and
+    releases the index caches and checkpoint blocks earlier modules left,
+    so suite results are independent of collection order; the staged
+    parquet itself is content-addressed, so a re-stage within one session
+    is cheap.
     """
-    from dateng_data_lakes_apache_spark_spark.operators.dedup import (
-        clear_resolve_memo,
-    )
-
-    clear_stage_memo()
-    clear_resolve_memo()
+    reset_session_state(spark)
     yield

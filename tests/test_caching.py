@@ -3,8 +3,11 @@ documentation-only persist contract with an explicit release path).
 
 Index-building queries persist through ``caching.track``; these tests
 prove (1) a multi-query session wrapped in ``cached_indexes()`` ends
-with executor storage EMPTY, (2) ``release_caches`` is idempotent, and
-(3) nested scopes release only their own entries.
+holding none of the storage blocks it created, (2) ``release_caches`` is
+idempotent, and (3) nested scopes release only their own entries.
+Storage checks look only at RDDs new since the test started, so blocks
+another module left behind (e.g. untracked checkpoints the
+ContextCleaner has not yet freed) cannot make a result order-dependent.
 """
 
 from __future__ import annotations
@@ -12,26 +15,27 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dateng_data_lakes_apache_spark_spark import cached_indexes, release_caches
-from dateng_data_lakes_apache_spark_spark.caching import track, tracked_count
+from dateng_data_lakes_apache_spark_spark.caching import (
+    reset_session_state,
+    track,
+    tracked_count,
+)
 from dateng_data_lakes_apache_spark_spark.registry import get_queries
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS, clear_stage_memo
+from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
 QS = get_queries()
 
 
-def _storage_empty(spark) -> bool:
-    """True iff no RDD blocks are held in executor storage."""
-    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == 0
+def _rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs currently holding blocks in executor storage."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def test_three_query_session_releases_all_caches(spark, sf_dir):
-    # Start clean: any caches left by earlier tests belong to them, and
-    # a memoized staged minhash from an earlier test file would skip the
+    # A memoized staged minhash from an earlier test file would skip the
     # index build this test asserts on.
-    release_caches()
-    clear_stage_memo()
-    spark.catalog.clearCache()
-    assert _storage_empty(spark)
+    reset_session_state(spark)
+    before = _rdd_ids(spark)
     with cached_indexes():
         # Three index-building queries: funnel stage tables and the
         # pagerank edge index persist through track(); minhash persists
@@ -42,19 +46,20 @@ def test_three_query_session_releases_all_caches(spark, sf_dir):
         QS["q_funnel"](spark, sf_dir).count()
         QS["q_pagerank"](spark, sf_dir).count()
         assert tracked_count() > 0, "index queries should register caches"
-        assert not _storage_empty(spark), "caches should be materialized"
+        assert _rdd_ids(spark) - before, "caches should be materialized"
     assert tracked_count() == 0
-    assert _storage_empty(spark), "cached_indexes() exit must empty storage"
+    assert not _rdd_ids(spark) - before, "cached_indexes() exit must free its blocks"
 
 
 def test_release_is_idempotent_and_counts(spark, sf_dir):
     release_caches()
+    before = _rdd_ids(spark)
     # q_basket_lift track()s its items frame (five consumers read it).
     QS["q_basket_lift"](spark, sf_dir).count()
     n = release_caches()
     assert n >= 1
     assert release_caches() == 0  # second drain releases nothing
-    assert _storage_empty(spark)
+    assert not _rdd_ids(spark) - before
 
 
 def test_minhash_builder_registers_no_cache(spark, sf_dir):
@@ -62,15 +67,16 @@ def test_minhash_builder_registers_no_cache(spark, sf_dir):
     self-join reads the identical subtree on both sides, so exchange
     reuse computes it once and a track() would only add a blocking
     cache-materialization job (the r11 driver-variance surface)."""
-    release_caches()
-    clear_stage_memo()
+    reset_session_state(spark)
+    before = _rdd_ids(spark)
     STAGED_BUILDERS["q_dedup_minhash"](spark, sf_dir).count()
     assert release_caches() == 0
-    assert _storage_empty(spark)
+    assert not _rdd_ids(spark) - before
 
 
 def test_nested_scopes_release_only_their_own(spark, sf_dir):
     release_caches()
+    before = _rdd_ids(spark)
     d = spark.range(10).withColumn("x", F.col("id") * 2)
     outer = track(d)
     outer.count()
@@ -80,9 +86,9 @@ def test_nested_scopes_release_only_their_own(spark, sf_dir):
         assert tracked_count() == 2
     # inner released, outer still cached
     assert tracked_count() == 1
-    assert not _storage_empty(spark)
+    assert _rdd_ids(spark) - before
     assert release_caches() == 1
-    assert _storage_empty(spark)
+    assert not _rdd_ids(spark) - before
 
 
 def test_release_superseded_exact_object_contract(spark):

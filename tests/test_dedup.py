@@ -3,9 +3,12 @@ the property the driver's rows-only check can't see."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
 from dateng_data_lakes_apache_spark_spark.operators.dedup import (
     _word_shingles,
     minhash_signature,
@@ -311,7 +314,7 @@ def test_resolve_computed_once_per_session(spark, monkeypatch):
         return real(s, d)
 
     monkeypatch.setattr(dd, "_build_resolve", counting)
-    dd._RESOLVE_MEMO.clear()  # isolate from earlier tests in this session
+    reset_session_state(spark)  # isolate from earlier tests in this session
     n_resolve = qs["q_dedup_resolve"](spark, sf).count()
     qs["q_dedup_cluster_stats"](spark, sf).count()
     qs["q_dedup_rate_by_source"](spark, sf).count()
@@ -320,3 +323,40 @@ def test_resolve_computed_once_per_session(spark, monkeypatch):
     # the memoized frame is a plain parquet scan of staged bytes — every
     # consumer sees the full per-doc resolve
     assert n_split == n_resolve > 0
+
+
+def test_resolve_memo_follows_session_lifecycle(spark, monkeypatch, tmp_path):
+    """resolved_clusters rides the one staged memo: a repeat call on the
+    same sf reuses it, a memo hit re-aims ``current`` at that sf's stage
+    dir, and reset_session_state makes the next call rebuild."""
+    from dateng_data_lakes_apache_spark_spark import staging
+    from dateng_data_lakes_apache_spark_spark.operators import dedup as dd
+
+    builds: list[str] = []
+
+    def stub(s, d):
+        builds.append(d)
+        return s.createDataFrame(
+            [(1, 1, False), (2, 1, True), (3, 3, False)],
+            "doc_id long, keeper_doc_id long, is_dup boolean",
+        )
+
+    monkeypatch.setattr(dd, "_build_resolve", stub)
+    monkeypatch.setattr(staging, "_EXPECTED_ROOT", str(tmp_path / "expected"))
+    sf_a, sf_b = str(tmp_path / "sf_a"), str(tmp_path / "sf_b")
+    current = staging._current("dedup_resolve")
+    reset_session_state(spark)
+    try:
+        assert dd.resolved_clusters(spark, sf_a).count() == 3
+        assert dd.resolved_clusters(spark, sf_a).count() == 3
+        assert builds == [sf_a], "a memoized sf must not rebuild"
+        dd.resolved_clusters(spark, sf_b)
+        assert os.readlink(current) == staging._stage_dir("dedup_resolve", sf_b)
+        dd.resolved_clusters(spark, sf_a)
+        assert builds == [sf_a, sf_b]
+        assert os.readlink(current) == staging._stage_dir("dedup_resolve", sf_a)
+        reset_session_state(spark)
+        assert dd.resolved_clusters(spark, sf_a).count() == 3
+        assert builds == [sf_a, sf_b, sf_a], "reset must force a rebuild"
+    finally:
+        reset_session_state(spark)

@@ -59,9 +59,10 @@ def degenerate_duck_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
 def main() -> None:
     from parity import _canon_frame
 
+    from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
     from dateng_data_lakes_apache_spark_spark.registry import get_oracles, get_queries
     from dateng_data_lakes_apache_spark_spark.session import get_spark
-    from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS, clear_stage_memo
+    from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
     variants = sys.argv[1:] or DEFAULT_VARIANTS
     spark = get_spark(app_name="degenerate-oracle-sweep")
@@ -102,8 +103,7 @@ def main() -> None:
                 bad[name] = f"{type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
             if name in bad:
                 print(f"[{variant}] {name}: {bad[name]}", flush=True)
-        clear_stage_memo()
-        spark.catalog.clearCache()
+        reset_session_state(spark)
         total_bad += len(bad)
         print(f"=== {variant}: {len(bad)} mismatches / {len(names)} oracled queries", flush=True)
     sys.exit(1 if total_bad else 0)

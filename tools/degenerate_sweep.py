@@ -424,9 +424,9 @@ def build(spark, variant: str) -> str:
 
 
 def main() -> None:
+    from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
     from dateng_data_lakes_apache_spark_spark.session import get_spark
-    from dateng_data_lakes_apache_spark_spark.staging import clear_stage_memo
 
     variants = sys.argv[1:] or DEFAULT_VARIANTS
     spark = get_spark(app_name="degenerate-sweep")
@@ -453,7 +453,7 @@ def main() -> None:
                     f"[{variant}] {name}: {time.perf_counter() - t0:.1f}s",
                     flush=True,
                 )
-        clear_stage_memo()
+        reset_session_state(spark)
         total_fails += len(fails)
         print(f"=== {variant}: {len(fails)} failures / {len(qs)} queries", flush=True)
     sys.exit(1 if total_fails else 0)

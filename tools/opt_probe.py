@@ -14,7 +14,6 @@ $SPARK_GRAFT_CPUS) so numbers are comparable.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import statistics
@@ -23,16 +22,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dateng_data_lakes_apache_spark_spark.caching import release_caches
-from dateng_data_lakes_apache_spark_spark.operators.dedup import clear_resolve_memo
+from dateng_data_lakes_apache_spark_spark.caching import (
+    release_session_caches,
+    reset_session_state,
+)
+from dateng_data_lakes_apache_spark_spark.plans.explain import formatted_plan
 from dateng_data_lakes_apache_spark_spark.registry import get_queries
 from dateng_data_lakes_apache_spark_spark.session import get_spark
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS, clear_stage_memo
-
-
-def explain_formatted(df) -> str:
-    jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
 
 def main() -> None:
@@ -83,12 +80,9 @@ def main() -> None:
                 os.makedirs(args.plans_dir, exist_ok=True)
                 tag = f"_{args.tag}" if args.tag else ""
                 with open(os.path.join(args.plans_dir, f"{name}{tag}.txt"), "w") as f:
-                    f.write(explain_formatted(df))
-            release_caches()
-            spark.catalog.clearCache()
-            gc.collect()
-        clear_stage_memo()
-        clear_resolve_memo()
+                    f.write(formatted_plan(df))
+            release_session_caches(spark)
+        reset_session_state(spark)
         out[name] = {
             "median": round(statistics.median(runs), 3),
             "runs": [round(t, 3) for t in runs],

@@ -27,7 +27,6 @@ Usage: python tools/sf1_sweep.py [--gen-only|--sweep-only]
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import statistics
@@ -204,10 +203,12 @@ def generate(spark) -> None:
 
 
 def sweep(spark) -> dict:
-    from dateng_data_lakes_apache_spark_spark.caching import release_caches
-    from dateng_data_lakes_apache_spark_spark.operators.dedup import clear_resolve_memo
+    from dateng_data_lakes_apache_spark_spark.caching import (
+        release_session_caches,
+        reset_session_state,
+    )
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
-    from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS, clear_stage_memo
+    from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
     qs = get_queries()
     result: dict[str, dict] = {}
@@ -228,9 +229,7 @@ def sweep(spark) -> dict:
                     os.environ.pop(k, None)
                 else:
                     os.environ[k] = v
-        release_caches()
-        spark.catalog.clearCache()
-        gc.collect()
+        release_session_caches(spark)
         return dt
 
     only = os.environ.get("SF1_SWEEP_ONLY")
@@ -246,15 +245,13 @@ def sweep(spark) -> dict:
             # this sweep (a "10x data runs 2x faster" artifact).
             for i in range(3):
                 if name in ("q_dedup_minhash", "q_dedup_resolve"):
-                    clear_stage_memo()
-                    clear_resolve_memo()
+                    reset_session_state(spark)
                 elif name in ("q_dedup_cluster_stats", "q_dedup_rate_by_source"):
                     # Production shape: consumers read the staged
                     # resolve artifact for THIS sf — build it untimed
                     # once, keep it across the consumer's runs.
                     if i == 0:
-                        clear_stage_memo()
-                        clear_resolve_memo()
+                        reset_session_state(spark)
                         qs["q_dedup_resolve"](spark, sf_dir).write.format(
                             "noop"
                         ).mode("overwrite").save()
