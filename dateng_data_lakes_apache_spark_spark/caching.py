@@ -28,6 +28,12 @@ steps out themselves:
   (``staging._STAGE_MEMO``), so the next query pays what a fresh session
   pays.
 
+Neither boundary clears the catalog's schema memo (``catalog._SCHEMAS``).
+It is keyed by each table's file manifest, so any rewrite of a table
+file already forces a fresh inference, and a memoized schema is the
+schema a fresh session would infer from the same files. Clearing it
+would only re-add one footer-inference job per table read.
+
 Loop-internal persists that unpersist within their own builder (label
 propagation rounds, sketch scratch tables) are deliberately NOT tracked:
 they never outlive the call, so there is nothing for the session to own.

@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -32,8 +32,36 @@ TABLES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: Raw (pre-normalization) schema per absolute table path, with the
+#: file manifest it was inferred from (see :func:`raw_table`).
+_SCHEMAS: dict[str, tuple[list, StructType]] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_manifest(sf_dir: str, name: str) -> list:
+    """(basename, inode, mtime_ns) of a table's data files: one parquet
+    file, or the visible ``*.parquet`` part files of a directory. The
+    source identity every schema memo and events staging is checked
+    against. A mutable catalog (the degenerate sweeps rebuild theirs in
+    place) otherwise serves stale schemas or staged bytes forever (r8
+    hostile sweep: marker-gated stagings replayed the PREVIOUS catalog
+    shape)."""
+    src = table_path(sf_dir, name)
+    if os.path.isdir(src):
+        srcs = sorted(
+            os.path.join(src, n)
+            for n in os.listdir(src)
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        )
+    else:
+        srcs = [src]
+    return [
+        [os.path.basename(s), os.stat(s).st_ino, os.stat(s).st_mtime_ns]
+        for s in srcs
+    ]
 
 
 def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -64,10 +92,34 @@ def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one catalog table as stored, before any normalization.
+
+    Spark infers the schema from the parquet footers once per (absolute
+    path, :func:`table_manifest`), and every later read supplies it. An
+    inferring read fires one footer job; a read with a supplied schema
+    fires none. Rewriting any data file changes the manifest, so the
+    next read infers again and a stale schema is never served. A path
+    that is not a local file or directory (an object-store URI) always
+    infers."""
+    path = table_path(sf_dir, name)
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key, manifest = os.path.abspath(path), table_manifest(sf_dir, name)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == manifest:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (manifest, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one catalog table. Parquet is self-describing — no forced
-    schema (the reference forced one redundantly, SURVEY §4.3-Q8)."""
-    df = spark.read.parquet(table_path(sf_dir, name))
+    """Read one catalog table: :func:`raw_table` with the events
+    ``ts`` normalized. The schema is Spark's own inference from the
+    footers, memoized per file manifest, so only the first read of an
+    unchanged table fires a job."""
+    df = raw_table(spark, sf_dir, name)
     if name == "events":
         df = normalize_nanos_ts(df)
     return df

@@ -348,7 +348,9 @@ def connected_components(
     neighbors; convergence takes O(graph diameter) rounds. Near-dup
     graphs are unions of small dense clusters (diameter ≤ ~3), so 2-3
     rounds settle real workloads; ``max_rounds`` bounds adversarial
-    chains. Per-round cost is one equi-join edges⋈labels plus a groupBy
+    chains: a loop that exhausts them without seeing a round change no
+    label raises ``RuntimeError`` instead of returning unconverged
+    labels. Per-round cost is one equi-join edges⋈labels plus a groupBy
     min — all hash-partitioned on node id, no cross-product, no
     collect: the same shape GraphX/GraphFrames uses, expressed in plain
     DataFrame ops. The driver-side loop runs one tiny `limit(1).count()`
@@ -398,6 +400,13 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        edges.unpersist()
+        release_superseded(labels)
+        raise RuntimeError(
+            f"connected_components did not converge in {max_rounds} rounds: "
+            "labels were still changing in the last round"
+        )
     edges.unpersist()
     return labels
 

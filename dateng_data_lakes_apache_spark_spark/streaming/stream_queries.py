@@ -28,7 +28,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import normalize_nanos_ts, table_path
+from ..catalog import normalize_nanos_ts, raw_table, table_manifest, table_path
 from ..common import o_dsum, o_ts_str, ts_str
 from ..registry import query
 
@@ -60,27 +60,6 @@ _STATE_PARTS = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "4")
 _REPLAY_FPT = int(os.environ.get("SPARK_GRAFT_STREAM_REPLAY_FPT", "2"))
 
 
-def _events_manifest(sf_dir: str) -> list:
-    """(basename, inode, mtime_ns) of the catalog's events files — the
-    source identity every events staging must be checked against. A
-    mutable catalog (the degenerate sweeps rebuild theirs in place)
-    otherwise serves stale staged bytes forever (r8 hostile sweep:
-    marker-gated stagings replayed the PREVIOUS catalog shape)."""
-    src = table_path(sf_dir, "events")
-    if os.path.isdir(src):
-        srcs = sorted(
-            os.path.join(src, n)
-            for n in os.listdir(src)
-            if n.endswith(".parquet") and not n.startswith((".", "_"))
-        )
-    else:
-        srcs = [src]
-    return [
-        [os.path.basename(s), os.stat(s).st_ino, os.stat(s).st_mtime_ns]
-        for s in srcs
-    ]
-
-
 def _marker_stale(marker: str, manifest: list) -> bool:
     """True iff the staging marker is absent or records a different
     source manifest than the current one."""
@@ -100,7 +79,7 @@ def _stage_events_dir(sf_dir: str) -> str:
     (hard-link/copy) every data file into a scratch dir once per scale
     factor — on a cluster the source would be the landing directory
     itself and this step disappears. Re-stages under the same rule as
-    the other events stagings (:func:`_events_manifest`): adding or
+    the other events stagings (:func:`catalog.table_manifest`): adding or
     removing part files while the lexicographically-first file stays
     untouched must invalidate the stage too (ADVICE r6). Hard-linked
     stage files share the source inode/mtime, so the manifest also
@@ -109,7 +88,7 @@ def _stage_events_dir(sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir))
     stage_dir = os.path.join(_SCRATCH, "stream_src", tag)
     marker = os.path.join(stage_dir, "_manifest.json")
-    manifest = _events_manifest(sf_dir)
+    manifest = table_manifest(sf_dir, "events")
     if not _marker_stale(marker, manifest):
         return stage_dir
     shutil.rmtree(stage_dir, ignore_errors=True)
@@ -126,12 +105,21 @@ def _stage_events_dir(sf_dir: str) -> str:
     return stage_dir
 
 
+def _replay(
+    spark: SparkSession, sf_dir: str, src_dir: str, files_per_trigger: int | None = None
+) -> DataFrame:
+    """Staged events files in ``src_dir`` as a bounded file stream: the
+    catalog's raw events schema (memoized, so no inference job), nanos
+    ts normalized to TimestampType exactly as in the batch catalog."""
+    reader = spark.readStream.schema(raw_table(spark, sf_dir, "events").schema)
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    return normalize_nanos_ts(reader.parquet(src_dir))
+
+
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table as a bounded file stream (schema from the batch read,
-    nanos ts normalized to TimestampType exactly as in the batch catalog)."""
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = spark.readStream.schema(schema).parquet(_stage_events_dir(sf_dir))
-    return normalize_nanos_ts(stream)
+    """events table as a bounded file stream (see :func:`_replay`)."""
+    return _replay(spark, sf_dir, _stage_events_dir(sf_dir))
 
 
 def _run_to_memory(
@@ -669,7 +657,7 @@ def _stage_events_ordered(spark: SparkSession, sf_dir: str, n_batches: int = 4) 
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     stage_dir = os.path.join(_SCRATCH, "stream_src_ordered", tag)
     marker = os.path.join(stage_dir, "_STAGED")
-    manifest = _events_manifest(sf_dir)
+    manifest = table_manifest(sf_dir, "events")
     if not _marker_stale(marker, manifest):
         return stage_dir
     shutil.rmtree(stage_dir, ignore_errors=True)
@@ -682,7 +670,7 @@ def _stage_events_ordered(spark: SparkSession, sf_dir: str, n_batches: int = 4) 
     # onto an epoch-integer key, so the quartile split is identical.
     from pyspark.sql.types import LongType as _Long
 
-    ev = spark.read.parquet(table_path(sf_dir, "events"))
+    ev = raw_table(spark, sf_dir, "events")
     key = (
         F.col("ts")
         if isinstance(ev.schema["ts"].dataType, _Long)
@@ -746,10 +734,7 @@ def q_stream_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     part a complete-mode check can never verify.
     """
     stage = _stage_events_ordered(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = normalize_nanos_ts(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-    )
+    stream = _replay(spark, sf_dir, stage, _REPLAY_FPT)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -835,12 +820,8 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_stream_stream_join: (watermark + range) per side.
     """
     stage = _stage_events_ordered(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-
     def side(event_type: str, prefix: str) -> DataFrame:
-        s = normalize_nanos_ts(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-        )
+        s = _replay(spark, sf_dir, stage, _REPLAY_FPT)
         return (
             s.where(F.col("event_type") == event_type)
             .select(
@@ -906,11 +887,8 @@ def q_stream_transform_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     stage = _stage_events_ordered(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     stream = (
-        normalize_nanos_ts(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-        )
+        _replay(spark, sf_dir, stage, _REPLAY_FPT)
         .where(
             (F.col("event_type") == "purchase")
             # finite-or-NULL values only (r9 nonfinite catalog): the
@@ -1015,7 +993,7 @@ def _stage_events_duplicated(spark: SparkSession, sf_dir: str) -> str:
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     dup_dir = os.path.join(_SCRATCH, "stream_src_duplicated", tag)
     marker = os.path.join(dup_dir, "_STAGED")
-    manifest = _events_manifest(sf_dir)
+    manifest = table_manifest(sf_dir, "events")
     if not _marker_stale(marker, manifest):
         return dup_dir
     shutil.rmtree(dup_dir, ignore_errors=True)
@@ -1059,11 +1037,8 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; the oracle is the distinct-row set.
     """
     stage = _stage_events_duplicated(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     stream = (
-        normalize_nanos_ts(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-        )
+        _replay(spark, sf_dir, stage, _REPLAY_FPT)
         .where(F.col("event_type") == "purchase")
         .select("event_id", "user_id", "event_type", "ts")
     )
@@ -1111,10 +1086,7 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     as q_manifest_pruned_scan).
     """
     stage = _stage_events_ordered(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-    stream = normalize_nanos_ts(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-    )
+    stream = _replay(spark, sf_dir, stage, _REPLAY_FPT)
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     snap_base = os.path.join(_SCRATCH, "stream_merge", tag)
     shutil.rmtree(snap_base, ignore_errors=True)  # deterministic fresh run
@@ -1207,11 +1179,8 @@ def q_stream_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the horizon; agg: open windows × keys).
     """
     stage = _stage_events_duplicated(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     stream = (
-        normalize_nanos_ts(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-        )
+        _replay(spark, sf_dir, stage, _REPLAY_FPT)
         .where(F.col("event_type") == "purchase")
         .select("event_id", "ts", "value")
     )
@@ -1308,12 +1277,8 @@ def q_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just values.
     """
     stage = _stage_events_ordered(spark, sf_dir)
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-
     def side(event_type: str, prefix: str) -> DataFrame:
-        s = normalize_nanos_ts(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", _REPLAY_FPT).parquet(stage)
-        )
+        s = _replay(spark, sf_dir, stage, _REPLAY_FPT)
         return (
             s.where(F.col("event_type") == event_type)
             .select(
@@ -1389,10 +1354,8 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not os.path.exists(dst):
                 os.link(os.path.join(stage, n), dst)
 
-    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
-
     def run_phase(sink: str) -> None:
-        ev = normalize_nanos_ts(spark.readStream.schema(schema).parquet(src))
+        ev = _replay(spark, sf_dir, src)
         agg = ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(30,8)")).alias("sum_value_dec"),

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -42,3 +43,19 @@ def _fresh_session_state(spark):
     """
     reset_session_state(spark)
     yield
+
+
+def jobs_fired(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` fires from the calling thread,
+    counted under a fresh job group once the listener bus has drained
+    (the status tracker learns of jobs asynchronously)."""
+    sc = spark.sparkContext
+    group = f"jobs-fired-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs_fired")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

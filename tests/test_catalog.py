@@ -14,11 +14,25 @@ the Spark-4.1 TimestampNTZ read and the ≤4.0 nanosAsLong long branch.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
-from dateng_data_lakes_apache_spark_spark.catalog import normalize_nanos_ts
+from dateng_data_lakes_apache_spark_spark.catalog import (
+    TABLES,
+    normalize_nanos_ts,
+    table,
+    table_path,
+)
+
+from .conftest import SF_SMALL, jobs_fired
+
+PERFBENCH_CATALOG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "catalog"
+)
 
 NANOS = [
     -1,  # 1969-12-31T23:59:59.999999999 → floor −1 µs (trunc would say 0)
@@ -57,6 +71,58 @@ def test_nanos_parquet_read_matches_duckdb(spark, tmp_path):
     df = spark.read.parquet(path)
     got = sorted(r.ts for r in normalize_nanos_ts(df).collect())
     assert got == want
+
+
+def _inferred(spark, sf_dir, name):
+    """What a read with Spark's own inference returns, uncached."""
+    df = spark.read.parquet(table_path(sf_dir, name))
+    return normalize_nanos_ts(df) if name == "events" else df
+
+
+@pytest.mark.parametrize("sf_dir", [SF_SMALL, PERFBENCH_CATALOG], ids=["sf0.001", "perfbench"])
+@pytest.mark.parametrize("name", TABLES)
+def test_memoized_schema_equals_inferred(spark, sf_dir, name):
+    table(spark, sf_dir, name)  # infer and memoize
+    assert table(spark, sf_dir, name).schema == _inferred(spark, sf_dir, name).schema
+
+
+def test_memoized_schema_on_nanos_and_directory_tables(spark, tmp_path):
+    """The pyarrow TIMESTAMP(NANOS) fixture as an events table, and a
+    Spark-written directory of part files: a memo hit returns the
+    inferred schema and the same rows."""
+    path, want = _expected(str(tmp_path))
+    os.rename(path, table_path(str(tmp_path), "events"))
+    spark.read.parquet(f"{SF_SMALL}/orders.parquet").repartition(3).write.parquet(
+        table_path(str(tmp_path), "orders")
+    )
+    for name in ("events", "orders"):
+        table(spark, str(tmp_path), name)
+        hit = table(spark, str(tmp_path), name)
+        assert hit.schema == _inferred(spark, str(tmp_path), name).schema
+    assert sorted(r.ts for r in table(spark, str(tmp_path), "events").collect()) == want
+    assert table(spark, str(tmp_path), "orders").count() == (
+        spark.read.parquet(f"{SF_SMALL}/orders.parquet").count()
+    )
+
+
+def test_second_read_of_unchanged_table_fires_no_job(spark, tmp_path):
+    spark.read.parquet(f"{SF_SMALL}/nation.parquet").write.parquet(
+        table_path(str(tmp_path), "nation")
+    )
+    assert jobs_fired(spark, lambda: table(spark, str(tmp_path), "nation")) >= 1
+    assert jobs_fired(spark, lambda: table(spark, str(tmp_path), "nation")) == 0
+
+
+def test_rewritten_table_is_inferred_again(spark, tmp_path):
+    """Rewriting the file in place (same name, usually the same inode)
+    changes its mtime, so the next read sees the added column."""
+    path = table_path(str(tmp_path), "region")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    df = table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(df.collect()) == [(0, "A"), (1, "B")]
 
 
 def test_configure_s3a_sets_hadoop_conf(spark):

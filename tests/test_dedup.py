@@ -140,6 +140,23 @@ def test_connected_components_chain_and_islands(spark):
     }
 
 
+def test_connected_components_raises_instead_of_truncating(spark):
+    """A 40-node path needs 40 rounds of min-label propagation: with 12
+    rounds the loop must fail loudly, not return split clusters."""
+    from dateng_data_lakes_apache_spark_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(39)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="12 rounds"):
+        connected_components(pairs, max_rounds=12)
+    labels = connected_components(pairs, max_rounds=64).collect()
+    assert len(labels) == 40
+    assert {r.label for r in labels} == {0}
+
+
 def test_dedup_resolve_planted_cluster(spark, sf_dir, monkeypatch):
     from dateng_data_lakes_apache_spark_spark.operators import dedup as dd
 
