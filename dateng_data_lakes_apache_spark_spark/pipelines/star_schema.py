@@ -7,9 +7,14 @@ fixes applied:
 - Q1: NDJSON read with multiLine=False;
 - Q2: true TimestampType via to_timestamp (not from_unixtime strings);
 - Q3: users deduplicated to latest state per user (window top-1);
-- Q4/Q6: no collect(); the filtered log subtree is cached once;
+- Q4/Q6: no collect(); the filtered log subtree is cached once and
+  released after the last write, whether the writes finish or fail;
 - Q7: os.path-joined output paths;
 - Q9: lossless raw staging, filter downstream.
+
+Songplays joins the events to the raw song rows (the reference's J1,
+etl.py:199-200), not to the written songs ⋈ artists dims, so its write
+parses the song JSON once.
 
 ``q_star_etl`` runs the same operator shape (filter → derive time parts
 → join dim → project/rename) over the engine catalog (events⋈customer),
@@ -143,12 +148,17 @@ def build_time_table(events: DataFrame) -> DataFrame:
     )
 
 
-def build_songplays_table(events: DataFrame, songs: DataFrame, artists: DataFrame) -> DataFrame:
+def build_songplays_table(events: DataFrame, song_df: DataFrame) -> DataFrame:
     """Songplays fact (reference etl.py:194-226): 2-key inner equi-join of
-    events to songs⋈artists, surrogate key via xxhash64 of natural keys
-    (deterministic, unlike monotonically_increasing_id — Q5)."""
-    song_dim = songs.join(artists, "artist_id").select(
-        "song_id", "title", "artist_id", F.col("name").alias("artist_name")
+    events to one broadcast of the raw song rows (J1, etl.py:199-200),
+    surrogate key via xxhash64 of natural keys (deterministic, unlike
+    monotonically_increasing_id — Q5). Songs without an artist_id never
+    match, so every songplay names an artist; each song matches on its
+    own artist_name, as in the reference."""
+    song_dim = (
+        song_df.where(F.col("artist_id").isNotNull())
+        .select("song_id", "title", "artist_id", "artist_name")
+        .dropDuplicates(["song_id"])
     )
     joined = events.join(
         F.broadcast(song_dim),
@@ -172,8 +182,9 @@ def build_songplays_table(events: DataFrame, songs: DataFrame, artists: DataFram
 
 def write_partitioned(df: DataFrame, out_dir: str, name: str, partition_cols: list[str] | None = None) -> None:
     """Lake sink (reference K1/K2, etl.py:120,190,226): snappy parquet,
-    hive partition layout, dynamic partition overwrite."""
-    writer = df.write.mode("overwrite")
+    hive partition layout, dynamic partition overwrite whatever the
+    session's ``partitionOverwriteMode``."""
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(os.path.join(out_dir, name))
@@ -182,7 +193,8 @@ def write_partitioned(df: DataFrame, out_dir: str, name: str, partition_cols: li
 def run_pipeline(spark: SparkSession, song_path: str, log_path: str, out_dir: str) -> dict[str, DataFrame]:
     """Full star-schema ETL: the reference's main() (etl.py:232-252) as a
     function. Caches the filtered log subtree once (Q6 fix) instead of
-    re-parsing JSON per output table."""
+    re-parsing JSON per output table, and unpersists it once the writes
+    finish or fail; the returned frames recompute from the sources."""
     songs_raw = read_song_data(spark, song_path)
     logs_raw = read_log_data(spark, log_path)
     events = filter_songplay_events(logs_raw).cache()
@@ -191,13 +203,16 @@ def run_pipeline(spark: SparkSession, song_path: str, log_path: str, out_dir: st
     artists = build_artists_table(songs_raw)
     users = build_users_table(events)
     time_tab = build_time_table(events)
-    songplays = build_songplays_table(events, songs, artists)
+    songplays = build_songplays_table(events, songs_raw)
 
-    write_partitioned(songs, out_dir, "songs", ["year", "artist_id"])
-    write_partitioned(artists, out_dir, "artists")
-    write_partitioned(users, out_dir, "users")
-    write_partitioned(time_tab, out_dir, "time", ["year", "month"])
-    write_partitioned(songplays, out_dir, "songplays", ["year", "month"])
+    try:
+        write_partitioned(songs, out_dir, "songs", ["year", "artist_id"])
+        write_partitioned(artists, out_dir, "artists")
+        write_partitioned(users, out_dir, "users")
+        write_partitioned(time_tab, out_dir, "time", ["year", "month"])
+        write_partitioned(songplays, out_dir, "songplays", ["year", "month"])
+    finally:
+        events.unpersist(blocking=True)
     return {
         "songs": songs,
         "artists": artists,

@@ -5,6 +5,13 @@ which only set ``spark.jars.packages`` for S3A. Here we pin the
 semantics-relevant configs (UTC session timezone — SURVEY §4.3-Q2) and
 the scale-relevant ones (AQE, Arrow, dynamic partition overwrite) so
 every query runs under the same contract on local[...] or a cluster.
+
+One conf follows the master instead: in local mode ``get_spark`` lists
+file inputs on the driver (``parallelPartitionDiscovery.threshold``
+pinned to ``Int.MaxValue``), since a "distributed" listing job there
+runs the same stat calls on the driver JVM's own threads plus one task
+per path. Any other master keeps Spark's default, which lists more than
+32 paths with a job: the right call against an object store.
 """
 
 from __future__ import annotations
@@ -103,6 +110,11 @@ def get_spark(
         conf["spark.sql.shuffle.partitions"] = os.environ.get(
             "SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"
         )
+    if master and (master == "local" or master.startswith("local[")):
+        # Executors are threads of this JVM, so a listing job makes the
+        # same stat calls as the driver would, plus a job with one task
+        # per path. On a cluster, Spark's default stands.
+        conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = "2147483647"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

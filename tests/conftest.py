@@ -59,3 +59,10 @@ def jobs_fired(spark, fn) -> int:
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def cached_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs currently holding blocks in executor storage.
+    Tests compare against a snapshot taken when they start, so blocks
+    an earlier module left behind cannot decide their result."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}

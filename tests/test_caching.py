@@ -23,19 +23,16 @@ from dateng_data_lakes_apache_spark_spark.caching import (
 from dateng_data_lakes_apache_spark_spark.registry import get_queries
 from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
+from .conftest import cached_rdd_ids
+
 QS = get_queries()
-
-
-def _rdd_ids(spark) -> set[int]:
-    """Ids of the RDDs currently holding blocks in executor storage."""
-    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def test_three_query_session_releases_all_caches(spark, sf_dir):
     # A memoized staged minhash from an earlier test file would skip the
     # index build this test asserts on.
     reset_session_state(spark)
-    before = _rdd_ids(spark)
+    before = cached_rdd_ids(spark)
     with cached_indexes():
         # Three index-building queries: funnel stage tables and the
         # pagerank edge index persist through track(); minhash persists
@@ -46,20 +43,20 @@ def test_three_query_session_releases_all_caches(spark, sf_dir):
         QS["q_funnel"](spark, sf_dir).count()
         QS["q_pagerank"](spark, sf_dir).count()
         assert tracked_count() > 0, "index queries should register caches"
-        assert _rdd_ids(spark) - before, "caches should be materialized"
+        assert cached_rdd_ids(spark) - before, "caches should be materialized"
     assert tracked_count() == 0
-    assert not _rdd_ids(spark) - before, "cached_indexes() exit must free its blocks"
+    assert not cached_rdd_ids(spark) - before, "cached_indexes() exit must free its blocks"
 
 
 def test_release_is_idempotent_and_counts(spark, sf_dir):
     release_caches()
-    before = _rdd_ids(spark)
+    before = cached_rdd_ids(spark)
     # q_basket_lift track()s its items frame (five consumers read it).
     QS["q_basket_lift"](spark, sf_dir).count()
     n = release_caches()
     assert n >= 1
     assert release_caches() == 0  # second drain releases nothing
-    assert not _rdd_ids(spark) - before
+    assert not cached_rdd_ids(spark) - before
 
 
 def test_minhash_builder_registers_no_cache(spark, sf_dir):
@@ -68,15 +65,15 @@ def test_minhash_builder_registers_no_cache(spark, sf_dir):
     reuse computes it once and a track() would only add a blocking
     cache-materialization job (the r11 driver-variance surface)."""
     reset_session_state(spark)
-    before = _rdd_ids(spark)
+    before = cached_rdd_ids(spark)
     STAGED_BUILDERS["q_dedup_minhash"](spark, sf_dir).count()
     assert release_caches() == 0
-    assert not _rdd_ids(spark) - before
+    assert not cached_rdd_ids(spark) - before
 
 
 def test_nested_scopes_release_only_their_own(spark, sf_dir):
     release_caches()
-    before = _rdd_ids(spark)
+    before = cached_rdd_ids(spark)
     d = spark.range(10).withColumn("x", F.col("id") * 2)
     outer = track(d)
     outer.count()
@@ -86,9 +83,9 @@ def test_nested_scopes_release_only_their_own(spark, sf_dir):
         assert tracked_count() == 2
     # inner released, outer still cached
     assert tracked_count() == 1
-    assert _rdd_ids(spark) - before
+    assert cached_rdd_ids(spark) - before
     assert release_caches() == 1
-    assert not _rdd_ids(spark) - before
+    assert not cached_rdd_ids(spark) - before
 
 
 def test_release_superseded_exact_object_contract(spark):
