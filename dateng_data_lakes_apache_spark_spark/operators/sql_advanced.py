@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import register_views, table
 from ..registry import query
+from ..sources.readers import write_parquet
+from ..staging import _sf_tag, stage_once
 
 
 @query(
@@ -177,9 +179,6 @@ def q_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. ANALYZE cost is one scan per table, amortized across every
     query that uses the stats (production lakes refresh on ingest).
     """
-    from ..sources.roundtrip import _stage_dir, _staged, write_parquet
-    from ..staging import _sf_tag
-
     stat_cols = {
         "customer": "c_custkey, c_nationkey",
         "orders": "o_custkey, o_totalprice",
@@ -190,7 +189,7 @@ def q_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # short-circuits), silently serving another sf_dir's data — found
     # by the multi-variant degenerate sweep, where the ties run read
     # the empty variant's tables.
-    tag = _sf_tag(sf_dir).replace("-", "_").replace(".", "_")
+    tag = _sf_tag(sf_dir)
     # CBO stays ON session-wide deliberately (the returned frame plans
     # LAZILY, so a restore-after would un-CBO it at the driver's
     # action): with statistics only on the *_cbo tables, it is a no-op
@@ -200,9 +199,10 @@ def q_stats_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t, cols in stat_cols.items():
         name = f"{t}_cbo_{tag}"
         if not spark.catalog.tableExists(name):
-            path = _stage_dir(sf_dir, f"cbo_{t}")
-            if not _staged(path):
-                write_parquet(table(spark, sf_dir, t), path)
+            path = stage_once(
+                sf_dir, t, f"cbo_{t}",
+                lambda p: write_parquet(table(spark, sf_dir, t), p),
+            )
             spark.sql(f"CREATE TABLE {name} USING parquet LOCATION '{path}'")
             spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {cols}")
     return spark.sql(

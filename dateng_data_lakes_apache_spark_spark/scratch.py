@@ -11,11 +11,12 @@ blip to exactly this race class on the previously-shared tree
 (VERDICT r8 item 1).
 
 Cost model: isolation trades cross-PROCESS staging reuse for safety.
-Within a process nothing changes — the manifest/_SUCCESS gates still
-dedupe staged writes across queries and bench repeats; only a fresh
-process re-stages, which it already had to do whenever the source
-manifest moved. Staged artifacts are orders of magnitude smaller than
-the inputs by design, so the re-stage cost is bounded.
+Within a process, derived artifacts follow one staging rule
+(``staging.stage_once``): each is written once per file manifest of the
+one catalog table it derives from, so queries and bench repeats share
+it; only a fresh process, or a rewrite of that table, re-stages. Staged
+artifacts are orders of magnitude smaller than the inputs by design, so
+the re-stage cost is bounded.
 
 Lifecycle: the run directory is removed at interpreter exit (atexit);
 directories orphaned by crashed runs are pruned at import once they

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..common import dsum, o_dsum
 from ..registry import query
+from ..staging import _sf_tag
 
 from ..scratch import SCRATCH as _SCRATCH  # run-ID-keyed (r9): no cross-session staging races
 
@@ -41,9 +42,7 @@ def stage_bucketed(
     the same basename in one session would otherwise hit the
     tableExists short-circuit and serve each other's data (the
     q_stats_cbo bug class, found by the multi-variant sweep)."""
-    from ..staging import _sf_tag
-
-    tag = _sf_tag(sf_dir).replace("-", "_").replace(".", "_")
+    tag = _sf_tag(sf_dir)
     tbl = f"bucketed_{tag}_{name}"
     if spark.catalog.tableExists(tbl):
         return tbl

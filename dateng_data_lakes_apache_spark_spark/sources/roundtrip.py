@@ -12,9 +12,10 @@ lossless format must be the identity, so the plain-parquet SQL is the
 exact oracle; any writer/reader defect (quoting, schema application,
 timestamp format, path-list handling) breaks the hash.
 
-Staging goes under ``.scratch/roundtrip/<sf-tag>/`` once per sf_dir
-(gated on the sink's ``_SUCCESS`` marker — testdata is immutable, so a
-completed staging is valid across sessions and driver re-runs).
+Each sink copy is staged through :func:`staging.stage_once`: written
+once per manifest of the catalog table it derives from, and rewritten
+when that table's files change (the degenerate sweeps rebuild their
+catalogs in place). Kinds shared by two queries have one writer each.
 
 Scale note: each round trip is sink + scan + one aggregate shuffle —
 the formats differ only in scan cost (CSV/JSON parse is ~5-10× parquet
@@ -34,57 +35,48 @@ from ..caching import track
 from ..catalog import table
 from ..common import bound_part, dsum, o_bound_part, o_dsum
 from ..registry import query
+from ..staging import stage_once
 from .readers import read_csv, read_json, read_parquet, write_csv, write_parquet
 
-from ..scratch import SCRATCH as _SCRATCH  # run-ID-keyed (r9): no cross-session staging races
+
+def _stage_customer_csv(spark: SparkSession, sf_dir: str) -> str:
+    """customer through the engine's CSV writer (q_csv_roundtrip,
+    q_cross_format_parity)."""
+    return stage_once(
+        sf_dir, "customer", "customer_csv",
+        lambda p: write_csv(table(spark, sf_dir, "customer"), p),
+    )
 
 
-def _catalog_manifest(sf_dir: str):
-    """(relpath, size, mtime_ns) of every parquet file under sf_dir —
-    the identity of the SOURCE catalog the stagings were built from."""
-    out = []
-    for root, _, files in os.walk(sf_dir):
-        for n in files:
-            if n.endswith(".parquet"):
-                p = os.path.join(root, n)
-                st = os.stat(p)
-                out.append([os.path.relpath(p, sf_dir), st.st_size, st.st_mtime_ns])
-    return sorted(out)
+def _stage_orders_part(spark: SparkSession, sf_dir: str) -> str:
+    """orders hive-partitioned on o_orderpriority (q_partitioned_pruned,
+    q_join_dpp). Partition VALUES are bounded at ingest
+    (common.bound_part — r10 longtext find: a 10k-char value exceeds the
+    filesystem's 255-byte path-segment cap and aborts the write). Real
+    keys (the priorities) pass verbatim."""
+    return stage_once(
+        sf_dir, "orders", "orders_part",
+        lambda p: write_parquet(
+            table(spark, sf_dir, "orders").withColumn(
+                "o_orderpriority", bound_part(F.col("o_orderpriority"))
+            ),
+            p,
+            partition_by=["o_orderpriority"],
+        ),
+    )
 
 
-def _stage_dir(sf_dir: str, kind: str) -> str:
-    """Per-(sf_dir, kind) staging dir with MUTABLE-SOURCE invalidation.
-
-    The ``_SUCCESS`` gates below assume the source catalog is immutable
-    — true for /root/testdata, FALSE for the degenerate-sweep catalogs,
-    which are rebuilt in place (and changed shape in r8, serving stale
-    bytes to one engine). So the tag root carries a manifest of the
-    source catalog's parquet files; any change wipes every staged kind
-    under the tag before returning (the stream sources solved the same
-    problem with their own manifest in r6 — this is the batch twin)."""
-    import json
-    import shutil
-
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    root = os.path.join(_SCRATCH, "roundtrip", tag)
-    man_path = os.path.join(root, "_src_manifest.json")
-    manifest = _catalog_manifest(sf_dir)
-    if os.path.exists(root):
-        old = None
-        if os.path.exists(man_path):
-            with open(man_path) as f:
-                old = json.load(f)
-        if old != manifest:
-            shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    if not os.path.exists(man_path):
-        with open(man_path, "w") as f:
-            json.dump(manifest, f)
-    return os.path.join(root, kind)
-
-
-def _staged(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+def _stage_orders_clustered(spark: SparkSession, sf_dir: str) -> str:
+    """orders range-clustered on o_custkey into 8 files
+    (q_clustered_write, q_manifest_pruned_scan)."""
+    return stage_once(
+        sf_dir, "orders", "orders_clustered",
+        lambda p: table(spark, sf_dir, "orders")
+        .repartitionByRange(8, "o_custkey")
+        .sortWithinPartitions("o_custkey")
+        .write.mode("overwrite")
+        .parquet(p),
+    )
 
 
 @query(
@@ -110,9 +102,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip decimal string); quoted commas in free-text columns are
     the writer's job, and the oracle catches any quoting defect.
     """
-    path = _stage_dir(sf_dir, "customer_csv")
-    if not _staged(path):
-        write_csv(table(spark, sf_dir, "customer"), path)
+    path = _stage_customer_csv(spark, sf_dir)
     # multi_line: the engine's own CSV may quote newline-bearing text
     # (write_csv is byte-faithful since r10) — the roundtrip reader
     # must parse it; see read_csv for the splittability trade-off.
@@ -150,9 +140,10 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp column through the JSON timestamp format — the exact
     class of bug the reference shipped (Q2: start_time left a string).
     """
-    path = _stage_dir(sf_dir, "orders_json")
-    if not _staged(path):
-        table(spark, sf_dir, "orders").write.mode("overwrite").json(path)
+    path = stage_once(
+        sf_dir, "orders", "orders_json",
+        lambda p: table(spark, sf_dir, "orders").write.mode("overwrite").json(p),
+    )
     o = read_json(
         spark,
         path,
@@ -187,17 +178,18 @@ def q_multipath_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Union of scans — so at 100 TB a thousand input directories still
     plan as one scan with one task pool.
     """
-    parts = []
-    for parity in (0, 1):
-        p = _stage_dir(sf_dir, f"orders_p{parity}")
-        if not _staged(p):
-            write_parquet(
+    parts = [
+        stage_once(
+            sf_dir, "orders", f"orders_p{parity}",
+            lambda p: write_parquet(
                 table(spark, sf_dir, "orders").where(
                     F.col("o_orderkey") % 2 == parity
                 ),
                 p,
-            )
-        parts.append(p)
+            ),
+        )
+        for parity in (0, 1)
+    ]
     o = read_parquet(spark, parts)
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -231,20 +223,9 @@ def q_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     column: the query result is provably identical to an unpartitioned
     scan + filter.
     """
-    path = _stage_dir(sf_dir, "orders_part")
-    if not _staged(path):
-        # Partition VALUES are bounded at ingest (common.bound_part —
-        # r10 longtext find: a 10k-char value exceeds the filesystem's
-        # 255-byte path-segment cap and aborts the write). Real keys
-        # (priorities here) pass verbatim; the filter literal below is
-        # its own bounded form.
-        write_parquet(
-            table(spark, sf_dir, "orders").withColumn(
-                "o_orderpriority", bound_part(F.col("o_orderpriority"))
-            ),
-            path,
-            partition_by=["o_orderpriority"],
-        )
+    # Partition values are bounded at ingest; the filter literal below
+    # is its own bounded form.
+    path = _stage_orders_part(spark, sf_dir)
     o = read_parquet(
         spark, path, empty_schema=table(spark, sf_dir, "orders").schema
     ).where(F.col("o_orderpriority") == "1-URGENT")
@@ -279,10 +260,8 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than per-query inference); the scan itself stays columnar
     and pruned.
     """
-    path = _stage_dir(sf_dir, "orders_evolving")
-    if not _staged(os.path.join(path, "batch=1")) or not _staged(
-        os.path.join(path, "batch=2")
-    ):
+
+    def write(path: str) -> None:
         o = table(spark, sf_dir, "orders")
         v1 = o.where(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_custkey", "o_totalprice"
@@ -292,6 +271,8 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_parquet(v1, os.path.join(path, "batch=1"))
         write_parquet(v2, os.path.join(path, "batch=2"))
+
+    path = stage_once(sf_dir, "orders", "orders_evolving", write)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(path, "batch=1"), os.path.join(path, "batch=2")
     )
@@ -328,15 +309,7 @@ def q_clustered_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources.py::test_clustered_write_file_ranges; the oracle
     proves the clustered copy lost nothing.
     """
-    path = _stage_dir(sf_dir, "orders_clustered")
-    if not _staged(path):
-        o = table(spark, sf_dir, "orders")
-        (
-            o.repartitionByRange(8, "o_custkey")
-            .sortWithinPartitions("o_custkey")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    path = _stage_orders_clustered(spark, sf_dir)
     o = read_parquet(spark, path).where(F.col("o_custkey").between(100, 199))
     return o.agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -389,8 +362,8 @@ def q_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     query proves the clustered copy lost nothing via a 2-D-predicate
     read-back against the original table.
     """
-    path = _stage_dir(sf_dir, "orders_zorder")
-    if not _staged(path):
+
+    def write(path: str) -> None:
         o = table(spark, sf_dir, "orders")
         day = F.datediff(F.col("o_orderdate"), F.lit("1970-01-01").cast("date"))
         bounds = o.agg(
@@ -417,6 +390,8 @@ def q_zorder_write(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(path)
         )
+
+    path = stage_once(sf_dir, "orders", "orders_zorder", write)
     o = read_parquet(spark, path).where(
         F.col("o_custkey").between(100, 199)
         & (F.col("o_orderdate") >= "1997-01-01")
@@ -456,13 +431,15 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, footer/open overhead and scheduler pressure scale with
     file count, not bytes.
     """
-    small = _stage_dir(sf_dir, "orders_smallfiles")
-    compact = _stage_dir(sf_dir, "orders_compacted")
-    if not _staged(small):
-        table(spark, sf_dir, "orders").repartition(64).write.mode("overwrite").parquet(
-            small
-        )
-    if not _staged(compact):
+    small = stage_once(
+        sf_dir, "orders", "orders_smallfiles",
+        lambda p: table(spark, sf_dir, "orders")
+        .repartition(64)
+        .write.mode("overwrite")
+        .parquet(p),
+    )
+
+    def compact(path: str) -> None:
         input_bytes = sum(
             e.stat().st_size
             for e in os.scandir(small)
@@ -471,8 +448,9 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         target = max(1, -(-input_bytes // (32 * 1024 * 1024)))
         read_parquet(spark, small).repartition(target).write.mode(
             "overwrite"
-        ).parquet(compact)
-    o = read_parquet(spark, compact)
+        ).parquet(path)
+
+    o = read_parquet(spark, stage_once(sf_dir, "orders", "orders_compacted", compact))
     return o.agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.countDistinct("o_orderkey").alias("n_keys"),
@@ -501,14 +479,13 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary-encoded strings survive bit-exact, and the aggregate is
     hash-checked against the original parquet via DuckDB.
     """
-    path = _stage_dir(sf_dir, "lineitem_orc")
-    if not _staged(path):
-        (
-            table(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_extendedprice", "l_quantity")
-            .write.mode("overwrite")
-            .orc(path)
-        )
+    path = stage_once(
+        sf_dir, "lineitem", "lineitem_orc",
+        lambda p: table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_extendedprice", "l_quantity")
+        .write.mode("overwrite")
+        .orc(p),
+    )
     l = spark.read.orc(path)  # noqa: E741
     return l.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_lines"),
@@ -539,16 +516,15 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Schema is applied on read: rowTag inference is banned on the ingest
     path for the same reason as CSV/JSON header inference.
     """
-    path = _stage_dir(sf_dir, "supplier_xml")
-    if not _staged(path):
-        (
-            table(spark, sf_dir, "supplier")
-            .write.mode("overwrite")
-            .format("xml")
-            .option("rootTag", "suppliers")
-            .option("rowTag", "supplier")
-            .save(path)
-        )
+    path = stage_once(
+        sf_dir, "supplier", "supplier_xml",
+        lambda p: table(spark, sf_dir, "supplier")
+        .write.mode("overwrite")
+        .format("xml")
+        .option("rootTag", "suppliers")
+        .option("rowTag", "supplier")
+        .save(p),
+    )
     s = (
         spark.read.format("xml")
         .schema("s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double")
@@ -605,21 +581,13 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-listing-sized scan), standing in for a real dimension
     table; the oracle proves runtime pruning lost no rows.
     """
-    path = _stage_dir(sf_dir, "orders_part")
-    if not _staged(path):
-        # bound_part: same ingest rule as q_partitioned_pruned (shared
-        # staged table). The oracle applies o_bound_part before ITS
-        # split so both engines evaluate the dim predicate on the same
-        # bounded string (ADVICE r10 closed the prefix-stability gap:
-        # a first token longer than the 24-char prefix that still casts
-        # to an int ≤ 2 diverged under the old raw-value oracle).
-        write_parquet(
-            table(spark, sf_dir, "orders").withColumn(
-                "o_orderpriority", bound_part(F.col("o_orderpriority"))
-            ),
-            path,
-            partition_by=["o_orderpriority"],
-        )
+    # Shared staged table, partition values bounded at ingest. The
+    # oracle applies o_bound_part before ITS split so both engines
+    # evaluate the dim predicate on the same bounded string (ADVICE r10
+    # closed the prefix-stability gap: a first token longer than the
+    # 24-char prefix that still casts to an int ≤ 2 diverged under the
+    # old raw-value oracle).
+    path = _stage_orders_part(spark, sf_dir)
     fact = read_parquet(
         spark, path, empty_schema=table(spark, sf_dir, "orders").schema
     )
@@ -665,28 +633,19 @@ def q_manifest_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle proves pruning lost no rows; the strict-subset property
     is asserted in tests/test_sources.py::test_manifest_prunes_files.
     """
-    data_dir = _stage_dir(sf_dir, "orders_clustered")
-    if not _staged(data_dir):
-        o = table(spark, sf_dir, "orders")
-        (
-            o.repartitionByRange(8, "o_custkey")
-            .sortWithinPartitions("o_custkey")
-            .write.mode("overwrite")
-            .parquet(data_dir)
+    data_dir = _stage_orders_clustered(spark, sf_dir)
+    manifest_dir = stage_once(
+        sf_dir, "orders", "orders_manifest",
+        lambda p: read_parquet(spark, data_dir)
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(
+            F.min("o_custkey").alias("min_ck"),
+            F.max("o_custkey").alias("max_ck"),
         )
-    manifest_dir = _stage_dir(sf_dir, "orders_manifest")
-    if not _staged(manifest_dir):
-        (
-            read_parquet(spark, data_dir)
-            .groupBy(F.input_file_name().alias("file"))
-            .agg(
-                F.min("o_custkey").alias("min_ck"),
-                F.max("o_custkey").alias("max_ck"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(manifest_dir)
-        )
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(p),
+    )
     lo, hi = 100, 199
     manifest = read_parquet(spark, manifest_dir)
     files = [
@@ -720,30 +679,35 @@ def _stage_malformed_csv(spark: SparkSession, sf_dir: str) -> str:
     PERMISSIVE reader must null the field and capture the raw line).
     Written with plain file I/O: the corruption must be byte-exact, not
     whatever a CSV writer would escape it into."""
-    path = _stage_dir(sf_dir, "malformed_csv")
-    marker = os.path.join(path, "_STAGED")
-    if os.path.exists(marker):
-        return path
-    os.makedirs(path, exist_ok=True)
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+        with open(os.path.join(path, "part-000.csv"), "w") as f:
+            for r in _sample_documents(spark, sf_dir):
+                bad = r["doc_id"] % 15 == 0
+                # NULL fields serialize as EMPTY, never Python's str(None)
+                # — a literal "None" lang parsed back as a real language
+                # group (hostile sweep find). This raw feed deliberately
+                # has no null sentinel, so '' and NULL both land as empty
+                # fields — the oracle mirrors that with NULLIF(lang, '').
+                n = "corrupted!" if bad else ("" if r["n_chars"] is None else str(r["n_chars"]))
+                lang = "" if r["lang"] is None else r["lang"]
+                f.write(f"{r['doc_id']},{n},{lang}\n")
+
+    return stage_once(sf_dir, "documents", "malformed_csv", write)
+
+
+def _sample_documents(spark: SparkSession, sf_dir: str) -> list:
+    """(doc_id, n_chars, lang) of every doc_id % 5 == 0 document, by
+    doc_id: the bounded subset (sf0.1: ~1k rows) both dirty fixtures
+    are written from."""
     rows = (
         table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 5 == 0)
         .select("doc_id", "n_chars", "lang")
-        .collect()  # bounded fixture subset (sf0.1: ~1k rows), staged once
+        .collect()
     )
-    with open(os.path.join(path, "part-000.csv"), "w") as f:
-        for r in sorted(rows, key=lambda r: r["doc_id"]):
-            bad = r["doc_id"] % 15 == 0
-            # NULL fields serialize as EMPTY, never Python's str(None) —
-            # a literal "None" lang parsed back as a real language group
-            # (hostile sweep find). This raw feed deliberately has no
-            # null sentinel, so '' and NULL both land as empty fields —
-            # the oracle mirrors that with NULLIF(lang, '').
-            n = "corrupted!" if bad else ("" if r["n_chars"] is None else str(r["n_chars"]))
-            lang = "" if r["lang"] is None else r["lang"]
-            f.write(f"{r['doc_id']},{n},{lang}\n")
-    open(marker, "w").close()
-    return path
+    return sorted(rows, key=lambda r: r["doc_id"])
 
 
 @query(
@@ -827,22 +791,20 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, same result — which is what makes dynamic overwrite the
     retry-safe incremental-load primitive at 100 TB).
     """
-    path = _stage_dir(sf_dir, "orders_dynpart")
-    # Gate on an explicit marker, not _SUCCESS: the dynamic-overwrite
-    # commit below removes the root _SUCCESS marker (probed), which
-    # would re-stage (full-rewrite) the base table on every call.
-    marker = os.path.join(path, ".staged_base")
-    if not os.path.exists(marker):
-        # bound_part: partition values are bounded at ingest (see
-        # q_partitioned_pruned / common.bound_part — r10 longtext find).
-        write_parquet(
+    # The base table is staged once; the dynamic-overwrite commit below
+    # removes the root _SUCCESS file but keeps the hidden staging marker.
+    # bound_part: partition values are bounded at ingest (see
+    # _stage_orders_part / common.bound_part — r10 longtext find).
+    path = stage_once(
+        sf_dir, "orders", "orders_dynpart",
+        lambda p: write_parquet(
             table(spark, sf_dir, "orders").withColumn(
                 "o_orderpriority", bound_part(F.col("o_orderpriority"))
             ),
-            path,
+            p,
             partition_by=["o_orderpriority"],
-        )
-        open(marker, "w").close()
+        ),
+    )
     # The correction batch derives from the PRISTINE source, not the
     # staged table — deriving from the overwritten table would compound
     # the fix on every run (2x, 4x, ...) and break idempotency.
@@ -904,19 +866,16 @@ def q_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented trade-off vs parquet (SURVEY §1.3); at 100 TB this path
     exists for INGEST, after which data lives columnar.
     """
-    d = table(spark, sf_dir, "documents")
-    path = _stage_dir(sf_dir, "documents_text")
-    rec_schema = "doc_id bigint, lang string, n_chars bigint, text string"
-    if not _staged(path):
-        (
-            d.select(
-                F.to_json(
-                    F.struct("doc_id", "lang", "n_chars", "text")
-                ).alias("value")
-            )
-            .write.mode("overwrite")
-            .text(path)
+    path = stage_once(
+        sf_dir, "documents", "documents_text",
+        lambda p: table(spark, sf_dir, "documents")
+        .select(
+            F.to_json(F.struct("doc_id", "lang", "n_chars", "text")).alias("value")
         )
+        .write.mode("overwrite")
+        .text(p),
+    )
+    rec_schema = "doc_id bigint, lang string, n_chars bigint, text string"
     lines = spark.read.text(path)
     rec = F.from_json(F.col("value"), rec_schema)
     parsed = lines.select(
@@ -944,30 +903,21 @@ def _stage_malformed_json(spark: SparkSession, sf_dir: str) -> str:
     (truncated uploads, chopped log lines), distinct from the CSV
     fixture's type violation. Plain file I/O keeps the corruption
     byte-exact."""
-    path = _stage_dir(sf_dir, "malformed_json")
-    marker = os.path.join(path, "_STAGED")
-    if os.path.exists(marker):
-        return path
-    os.makedirs(path, exist_ok=True)
-    rows = (
-        table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 5 == 0)
-        .select("doc_id", "n_chars", "lang")
-        .collect()  # bounded fixture subset, staged once
-    )
-    import json as _json
+    import json
 
-    with open(os.path.join(path, "part-000.json"), "w") as f:
-        for r in sorted(rows, key=lambda r: r["doc_id"]):
-            line = _json.dumps(
-                {"doc_id": r["doc_id"], "n_chars": r["n_chars"], "lang": r["lang"]},
-                separators=(",", ":"),
-            )
-            if r["doc_id"] % 15 == 0:
-                line = line[: len(line) // 2]  # truncated mid-object
-            f.write(line + "\n")
-    open(marker, "w").close()
-    return path
+    def write(path: str) -> None:
+        os.makedirs(path)
+        with open(os.path.join(path, "part-000.json"), "w") as f:
+            for r in _sample_documents(spark, sf_dir):
+                line = json.dumps(
+                    {"doc_id": r["doc_id"], "n_chars": r["n_chars"], "lang": r["lang"]},
+                    separators=(",", ":"),
+                )
+                if r["doc_id"] % 15 == 0:
+                    line = line[: len(line) // 2]  # truncated mid-object
+                f.write(line + "\n")
+
+    return stage_once(sf_dir, "documents", "malformed_json", write)
 
 
 @query(
@@ -1091,15 +1041,13 @@ def q_cross_format_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-to-string formatting ever reaches the hash input.
     """
     src = table(spark, sf_dir, "customer")
-    csv_path = _stage_dir(sf_dir, "customer_csv")  # shared with q_csv_roundtrip
-    if not _staged(csv_path):
-        write_csv(src, csv_path)
-    json_path = _stage_dir(sf_dir, "customer_json")
-    if not _staged(json_path):
-        src.write.mode("overwrite").json(json_path)
-    orc_path = _stage_dir(sf_dir, "customer_orc")
-    if not _staged(orc_path):
-        src.write.mode("overwrite").orc(orc_path)
+    csv_path = _stage_customer_csv(spark, sf_dir)
+    json_path = stage_once(
+        sf_dir, "customer", "customer_json", lambda p: src.write.mode("overwrite").json(p)
+    )
+    orc_path = stage_once(
+        sf_dir, "customer", "customer_orc", lambda p: src.write.mode("overwrite").orc(p)
+    )
 
     legs = {
         "parquet": src,

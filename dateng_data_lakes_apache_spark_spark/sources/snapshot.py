@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..common import dsum, o_dsum
 from ..registry import query
-from .roundtrip import _stage_dir, _staged
+from ..staging import stage_once
 
 
 def _vlog_dir(root: str) -> str:
@@ -89,9 +89,13 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
     [100, 199] — rewriting ONLY the files whose custkey range intersects
     the predicate (resolved from per-file min/max, never by opening
     every file's rows)."""
-    root = _stage_dir(sf_dir, "snap_orders")
-    if os.path.exists(os.path.join(_vlog_dir(root), "v1.json")):
-        return root
+    return stage_once(
+        sf_dir, "orders", "snap_orders",
+        lambda root: _write_versioned_orders(spark, sf_dir, root),
+    )
+
+
+def _write_versioned_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
     data0 = os.path.join(root, "d0")
     (
         table(spark, sf_dir, "orders")
@@ -131,7 +135,7 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
         # commit (same live set as v0) — exactly what a production
         # format records for an UPDATE that touched nothing.
         commit(root, 1, added=[], removed=[])
-        return root
+        return
     data1 = os.path.join(root, "d1")
     (
         spark.read.parquet(*touched)
@@ -154,7 +158,6 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> str:
         if n.endswith(".parquet") and not n.startswith(".")
     ]
     commit(root, 1, added=v1_files, removed=touched)
-    return root
 
 
 @query(
@@ -320,10 +323,13 @@ def _stage_concurrent_orders(spark: SparkSession, sf_dir: str) -> str:
       The builder asserts the conflict fires; silently succeeding here
       would be the lost-update anomaly.
     """
-    root = _stage_dir(sf_dir, "snap_conc")
-    done = os.path.join(_vlog_dir(root), "v2.json")
-    if os.path.exists(done):
-        return root
+    return stage_once(
+        sf_dir, "orders", "snap_conc",
+        lambda root: _write_concurrent_orders(spark, sf_dir, root),
+    )
+
+
+def _write_concurrent_orders(spark: SparkSession, sf_dir: str, root: str) -> None:
     base = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -411,7 +417,6 @@ def _stage_concurrent_orders(spark: SparkSession, sf_dir: str) -> str:
             raise RuntimeError(
                 "stale overlapping rewrite committed: lost-update anomaly"
             )
-    return root
 
 
 @query(

@@ -30,21 +30,33 @@ reads. Since r9 the whole
 root (scratch.py), so two concurrent SESSIONS cannot race the pointer
 or the bytes at all — the residual race class the r8 record observed
 in combined runs is structurally gone.
+
+Every other derived scratch artifact (format copies, stream sources,
+snapshot tables, CBO twins) follows one rule, :func:`stage_once`: it
+derives from one catalog table and is current iff its ``.staged``
+marker holds that table's :func:`catalog.table_manifest`.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
+import re
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import table_manifest
 from .scratch import SCRATCH
 
 #: Run-ID-keyed (scratch.SCRATCH): concurrent sessions can never race
 #: each other's staged bytes or `current` pointers (VERDICT r8 item 1).
 _EXPECTED_ROOT = os.path.join(SCRATCH, "expected")
+
+#: Root of every :func:`stage_once` artifact.
+_STAGED_ROOT = os.path.join(SCRATCH, "staged")
 
 #: name → builder callable returning the PRE-staging pipeline frame.
 #: This is the registry the structural guards target: plan snapshots and
@@ -116,12 +128,43 @@ def clear_stage_memo() -> None:
 
 
 def _sf_tag(sf_dir: str) -> str:
-    # Basename + short path hash: two datasets with the same basename at
-    # different paths (/a/sf1 vs /b/sf1) must never clobber each other's
-    # staged bytes (ADVICE r5).
+    """Basename + short path hash, e.g. ``sf0_01_1a2b3c4d``: two datasets
+    with the same basename at different paths (/a/sf1 vs /b/sf1) never
+    share staged bytes or catalog tables (ADVICE r5). Only ASCII letters,
+    digits and ``_``, so it serves as a directory name and inside an
+    unquoted SQL table name alike."""
     norm = os.path.normpath(sf_dir)
-    base = os.path.basename(norm).replace(".", "_")
-    return f"{base}-{hashlib.md5(norm.encode()).hexdigest()[:8]}"
+    base = re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(norm))
+    return f"{base}_{hashlib.md5(norm.encode()).hexdigest()[:8]}"
+
+
+def staged_dir(sf_dir: str, kind: str) -> str:
+    """Where :func:`stage_once` keeps ``kind`` for ``sf_dir``; stages
+    nothing."""
+    return os.path.join(_STAGED_ROOT, _sf_tag(sf_dir), kind)
+
+
+def stage_once(sf_dir: str, table: str, kind: str, write: Callable[[str], None]) -> str:
+    """Return ``kind``'s dir for ``sf_dir``; if the ``.staged`` marker
+    there does not hold the current manifest of catalog ``table`` (the
+    one table the artifact derives from), remove the dir, rebuild it
+    with ``write(dir)`` and write the marker last, so a failed write
+    never looks staged. Spark's file listing and file-stream source
+    skip dot-files, so readers never see the marker."""
+    path = staged_dir(sf_dir, kind)
+    marker = os.path.join(path, ".staged")
+    manifest = table_manifest(sf_dir, table)
+    try:
+        with open(marker) as fh:
+            if json.load(fh) == manifest:
+                return path
+    except (OSError, ValueError):
+        pass
+    shutil.rmtree(path, ignore_errors=True)
+    write(path)
+    with open(marker, "w") as fh:
+        json.dump(manifest, fh)
+    return path
 
 
 def stage_expectation(df: DataFrame, name: str, sf_dir: str) -> DataFrame:

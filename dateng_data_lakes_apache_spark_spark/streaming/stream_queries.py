@@ -20,7 +20,6 @@ on a cluster — only the source/sink lines change.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -31,6 +30,7 @@ from pyspark.sql import functions as F
 from ..catalog import normalize_nanos_ts, raw_table, table_manifest, table_path
 from ..common import o_dsum, o_ts_str, ts_str
 from ..registry import query
+from ..staging import _sf_tag, stage_once
 
 from ..common import finite as _finite
 from ..scratch import SCRATCH as _SCRATCH  # run-ID-keyed (r9): no cross-session staging races
@@ -42,34 +42,22 @@ from ..scratch import SCRATCH as _SCRATCH  # run-ID-keyed (r9): no cross-session
 #: (9.1→4.8 s) and q_stream_chained (7.6→4.3 s); 4→2 bought ~7% more;
 #: tmpfs checkpoints bought ~4% on top (not taken: checkpoint
 #: durability is the production contract, scratch stays on disk).
-#: Default 4 keeps some state parallelism for larger local SFs; on a
-#: real cluster size this to executor count × state volume (env knob).
-_STATE_PARTS = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "4")
+#: 4 keeps some state parallelism for larger local SFs; on a real
+#: cluster size this to executor count × state volume.
+_STATE_PARTS = "4"
 
 #: Files per micro-batch for the ordered/duplicated staged replays.
-#: The staged artifact stays 4 time-ordered files; this knob sets how
+#: The staged artifact stays 4 time-ordered files; this sets how
 #: many arrive per trigger. Emission is watermark-arithmetic on the
 #: FINAL watermark (each oracle documents the rule), so the result set
 #: is replay-granularity-invariant — verified: row sets identical at
 #: 1/2/4 files per trigger. r11 A/B (state parts 2): outer join 6.6 →
-#: 3.3 → 2.2 s, chained 4.5 → 3.0 → 1.8 s. Default 2 keeps a genuine
+#: 3.3 → 2.2 s, chained 4.5 → 3.0 → 1.8 s. 2 keeps a genuine
 #: MULTI-batch replay (the watermark still advances mid-stream, so
 #: incremental emission/eviction stays exercised) at half the
-#: micro-batch plan+commit rounds; set 1 to restore the per-file
-#: replay for watermark forensics.
-_REPLAY_FPT = int(os.environ.get("SPARK_GRAFT_STREAM_REPLAY_FPT", "2"))
-
-
-def _marker_stale(marker: str, manifest: list) -> bool:
-    """True iff the staging marker is absent or records a different
-    source manifest than the current one."""
-    if not os.path.exists(marker):
-        return True
-    try:
-        with open(marker) as fh:
-            return json.load(fh) != manifest
-    except (OSError, ValueError):
-        return True
+#: micro-batch plan+commit rounds; 1 is the per-file replay for
+#: watermark forensics.
+_REPLAY_FPT = 2
 
 
 def _stage_events_dir(sf_dir: str) -> str:
@@ -78,31 +66,29 @@ def _stage_events_dir(sf_dir: str) -> str:
     Spark-written DIRECTORY of part files (any real lake layout). Stage
     (hard-link/copy) every data file into a scratch dir once per scale
     factor — on a cluster the source would be the landing directory
-    itself and this step disappears. Re-stages under the same rule as
-    the other events stagings (:func:`catalog.table_manifest`): adding or
+    itself and this step disappears. Staged through
+    :func:`staging.stage_once` on the events manifest: adding or
     removing part files while the lexicographically-first file stays
-    untouched must invalidate the stage too (ADVICE r6). Hard-linked
-    stage files share the source inode/mtime, so the manifest also
-    proves the staged copies themselves are current."""
-    src = table_path(sf_dir, "events")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    stage_dir = os.path.join(_SCRATCH, "stream_src", tag)
-    marker = os.path.join(stage_dir, "_manifest.json")
-    manifest = table_manifest(sf_dir, "events")
-    if not _marker_stale(marker, manifest):
-        return stage_dir
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    os.makedirs(stage_dir, exist_ok=True)
-    srcs = [os.path.join(src, m[0]) for m in manifest] if os.path.isdir(src) else [src]
-    for i, s in enumerate(srcs):
-        staged = os.path.join(stage_dir, f"events-{i:03d}.parquet")
-        try:
-            os.link(s, staged)
-        except OSError:
-            shutil.copyfile(s, staged)
-    with open(marker, "w") as fh:
-        json.dump(manifest, fh)
-    return stage_dir
+    untouched invalidates the stage too (ADVICE r6). Hard-linked stage
+    files share the source inode/mtime, so the manifest also proves the
+    staged copies themselves are current."""
+
+    def write(stage_dir: str) -> None:
+        src = table_path(sf_dir, "events")
+        os.makedirs(stage_dir)
+        srcs = (
+            [os.path.join(src, m[0]) for m in table_manifest(sf_dir, "events")]
+            if os.path.isdir(src)
+            else [src]
+        )
+        for i, s in enumerate(srcs):
+            staged = os.path.join(stage_dir, f"events-{i:03d}.parquet")
+            try:
+                os.link(s, staged)
+            except OSError:
+                shutil.copyfile(s, staged)
+
+    return stage_once(sf_dir, "events", "events_stream", write)
 
 
 def _replay(
@@ -475,8 +461,7 @@ def q_stream_sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch SQL twin — verifying the full stream→sink→read round trip,
     not just the in-memory result.
     """
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out_dir = os.path.join(_SCRATCH, "stream_sink", tag)
+    out_dir = os.path.join(_SCRATCH, "stream_sink", _sf_tag(sf_dir))
     ckpt = os.path.join(_SCRATCH, "checkpoints", f"sink_{uuid.uuid4().hex[:8]}")
 
     ev = _events_stream(spark, sf_dir)
@@ -654,54 +639,46 @@ def _stage_events_ordered(spark: SparkSession, sf_dir: str, n_batches: int = 4) 
     """
     import glob
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    stage_dir = os.path.join(_SCRATCH, "stream_src_ordered", tag)
-    marker = os.path.join(stage_dir, "_STAGED")
-    manifest = table_manifest(sf_dir, "events")
-    if not _marker_stale(marker, manifest):
-        return stage_dir
-    shutil.rmtree(stage_dir, ignore_errors=True)
-    os.makedirs(stage_dir, exist_ok=True)
-    # split on a NUMERIC key derived from the raw ts and write the rows
-    # unchanged: the stream read applies the ORIGINAL events schema, so
-    # the staged files must keep the source physical type (normalization
-    # happens stream-side). The raw ts is a nanos long on Spark ≤4.0
-    # (nanosAsLong) and TIMESTAMP_NTZ on ≥4.1 — both map monotonically
-    # onto an epoch-integer key, so the quartile split is identical.
-    from pyspark.sql.types import LongType as _Long
+    def write(stage_dir: str) -> None:
+        os.makedirs(stage_dir)
+        # split on a NUMERIC key derived from the raw ts and write the rows
+        # unchanged: the stream read applies the ORIGINAL events schema, so
+        # the staged files must keep the source physical type (normalization
+        # happens stream-side). The raw ts is a nanos long on Spark ≤4.0
+        # (nanosAsLong) and TIMESTAMP_NTZ on ≥4.1 — both map monotonically
+        # onto an epoch-integer key, so the quartile split is identical.
+        from pyspark.sql.types import LongType as _Long
 
-    ev = raw_table(spark, sf_dir, "events")
-    key = (
-        F.col("ts")
-        if isinstance(ev.schema["ts"].dataType, _Long)
-        else F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    cuts = ev.select(
-        F.percentile(key, F.array(*[F.lit(i / n_batches) for i in range(1, n_batches)])).alias("c")
-    ).collect()[0]["c"]
-    # percentile over an EMPTY table returns NULL: degrade to a single
-    # (empty) batch instead of crashing — the replay shape is moot with
-    # no rows, but the stream queries must still run end-to-end.
-    bounds = (
-        [float("-inf")]
-        + ([int(c) for c in cuts] if cuts is not None else [])
-        + [float("inf")]
-    )
-    for k in range(len(bounds) - 1):
-        lo, hi = bounds[k], bounds[k + 1]
-        part = ev.where((key > F.lit(lo)) if lo != float("-inf") else F.lit(True)).where(
-            (key <= F.lit(hi)) if hi != float("inf") else F.lit(True)
+        ev = raw_table(spark, sf_dir, "events")
+        key = (
+            F.col("ts")
+            if isinstance(ev.schema["ts"].dataType, _Long)
+            else F.unix_micros(F.col("ts").cast("timestamp"))
         )
-        tmp = os.path.join(stage_dir, f"_tmp_{k}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src_file = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-        dst = os.path.join(stage_dir, f"batch-{k:02d}.parquet")
-        shutil.move(src_file, dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, (1_700_000_000 + k, 1_700_000_000 + k))  # monotone mtimes
-    with open(marker, "w") as fh:
-        json.dump(manifest, fh)
-    return stage_dir
+        fracs = F.array(*[F.lit(i / n_batches) for i in range(1, n_batches)])
+        cuts = ev.select(F.percentile(key, fracs).alias("c")).collect()[0]["c"]
+        # percentile over an EMPTY table returns NULL: degrade to a single
+        # (empty) batch instead of crashing — the replay shape is moot with
+        # no rows, but the stream queries must still run end-to-end.
+        bounds = (
+            [float("-inf")]
+            + ([int(c) for c in cuts] if cuts is not None else [])
+            + [float("inf")]
+        )
+        for k in range(len(bounds) - 1):
+            lo, hi = bounds[k], bounds[k + 1]
+            part = ev.where(
+                (key > F.lit(lo)) if lo != float("-inf") else F.lit(True)
+            ).where((key <= F.lit(hi)) if hi != float("inf") else F.lit(True))
+            tmp = os.path.join(stage_dir, f"_tmp_{k}")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src_file = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+            dst = os.path.join(stage_dir, f"batch-{k:02d}.parquet")
+            shutil.move(src_file, dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.utime(dst, (1_700_000_000 + k, 1_700_000_000 + k))  # monotone mtimes
+
+    return stage_once(sf_dir, "events", "events_ordered", write)
 
 
 @query(
@@ -990,25 +967,19 @@ def _stage_events_duplicated(spark: SparkSession, sf_dir: str) -> str:
     base = _stage_events_ordered(spark, sf_dir)
     import glob
 
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    dup_dir = os.path.join(_SCRATCH, "stream_src_duplicated", tag)
-    marker = os.path.join(dup_dir, "_STAGED")
-    manifest = table_manifest(sf_dir, "events")
-    if not _marker_stale(marker, manifest):
-        return dup_dir
-    shutil.rmtree(dup_dir, ignore_errors=True)
-    os.makedirs(dup_dir, exist_ok=True)
-    for k, src in enumerate(sorted(glob.glob(os.path.join(base, "batch-*.parquet")))):
-        for j, suffix in enumerate(("a", "b")):
-            dst = os.path.join(dup_dir, f"replay-{k:02d}{suffix}.parquet")
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copyfile(src, dst)
-            os.utime(dst, (1_710_000_000 + 2 * k + j,) * 2)
-    with open(marker, "w") as fh:
-        json.dump(manifest, fh)
-    return dup_dir
+    def write(dup_dir: str) -> None:
+        os.makedirs(dup_dir)
+        batches = sorted(glob.glob(os.path.join(base, "batch-*.parquet")))
+        for k, src in enumerate(batches):
+            for j, suffix in enumerate(("a", "b")):
+                dst = os.path.join(dup_dir, f"replay-{k:02d}{suffix}.parquet")
+                try:
+                    os.link(src, dst)
+                except OSError:
+                    shutil.copyfile(src, dst)
+                os.utime(dst, (1_710_000_000 + 2 * k + j,) * 2)
+
+    return stage_once(sf_dir, "events", "events_duplicated", write)
 
 
 @query(
@@ -1087,8 +1058,7 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     stage = _stage_events_ordered(spark, sf_dir)
     stream = _replay(spark, sf_dir, stage, _REPLAY_FPT)
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    snap_base = os.path.join(_SCRATCH, "stream_merge", tag)
+    snap_base = os.path.join(_SCRATCH, "stream_merge", _sf_tag(sf_dir))
     shutil.rmtree(snap_base, ignore_errors=True)  # deterministic fresh run
     ckpt = os.path.join(_SCRATCH, "checkpoints", f"merge_{uuid.uuid4().hex[:8]}")
     state = {"current": None}
@@ -1338,8 +1308,7 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch stays bounded).
     """
     stage = _stage_events_ordered(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    src = os.path.join(_SCRATCH, "stream_restart_src", tag)
+    src = os.path.join(_SCRATCH, "stream_restart_src", _sf_tag(sf_dir))
     ckpt = os.path.join(_SCRATCH, "checkpoints", f"restart_{uuid.uuid4().hex[:8]}")
     shutil.rmtree(src, ignore_errors=True)
     os.makedirs(src, exist_ok=True)

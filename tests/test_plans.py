@@ -363,7 +363,7 @@ def test_cbo_reorders_star_join(spark, sf_dir):
     # sf tag so concurrent catalogs in one session never collide)
     from dateng_data_lakes_apache_spark_spark.staging import _sf_tag
 
-    tag = _sf_tag(sf_dir).replace("-", "_").replace(".", "_")
+    tag = _sf_tag(sf_dir)
     stats = spark.sql(f"DESC EXTENDED customer_cbo_{tag} c_custkey").collect()
     vals = {r.info_name: r.info_value for r in stats}
     assert vals.get("max") not in (None, "NULL")

@@ -118,9 +118,9 @@ def test_clustered_write_file_ranges(spark, sf_dir):
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
 
     get_queries()["q_clustered_write"](spark, sf_dir).collect()  # ensure staged
-    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import _stage_dir
+    from dateng_data_lakes_apache_spark_spark.staging import staged_dir
 
-    files = sorted(glob.glob(os.path.join(_stage_dir(sf_dir, "orders_clustered"), "*.parquet")))
+    files = sorted(glob.glob(os.path.join(staged_dir(sf_dir, "orders_clustered"), "*.parquet")))
     assert len(files) >= 4
     ranges = []
     for f in files:
@@ -148,9 +148,9 @@ def test_zorder_write_skips_both_dims(spark, sf_dir):
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
 
     get_queries()["q_zorder_write"](spark, sf_dir).collect()  # ensure staged
-    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import _stage_dir
+    from dateng_data_lakes_apache_spark_spark.staging import staged_dir
 
-    files = sorted(glob.glob(os.path.join(_stage_dir(sf_dir, "orders_zorder"), "*.parquet")))
+    files = sorted(glob.glob(os.path.join(staged_dir(sf_dir, "orders_zorder"), "*.parquet")))
     assert len(files) >= 8
     spans = []
     for f in files:
@@ -190,10 +190,10 @@ def test_compact_files_counts(spark, sf_dir):
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
 
     get_queries()["q_compact_files"](spark, sf_dir).collect()  # ensure staged
-    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import _stage_dir
+    from dateng_data_lakes_apache_spark_spark.staging import staged_dir
 
-    small = glob.glob(os.path.join(_stage_dir(sf_dir, "orders_smallfiles"), "*.parquet"))
-    compact = glob.glob(os.path.join(_stage_dir(sf_dir, "orders_compacted"), "*.parquet"))
+    small = glob.glob(os.path.join(staged_dir(sf_dir, "orders_smallfiles"), "*.parquet"))
+    compact = glob.glob(os.path.join(staged_dir(sf_dir, "orders_compacted"), "*.parquet"))
     assert len(small) == 64
     input_bytes = sum(os.path.getsize(f) for f in small)
     target = max(1, -(-input_bytes // (32 * 1024 * 1024)))
@@ -226,14 +226,12 @@ def test_manifest_prunes_files(spark, sf_dir):
     # The manifest must admit a strict subset of the clustered files for a
     # selective custkey predicate (8 range-disjoint files → 1-2 overlap).
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
-    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import (
-        _stage_dir,
-        read_parquet,
-    )
+    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import read_parquet
+    from dateng_data_lakes_apache_spark_spark.staging import staged_dir
     from pyspark.sql import functions as F
 
     get_queries()["q_manifest_pruned_scan"](spark, sf_dir).collect()  # stage
-    manifest = read_parquet(spark, _stage_dir(sf_dir, "orders_manifest"))
+    manifest = read_parquet(spark, staged_dir(sf_dir, "orders_manifest"))
     total = manifest.count()
     kept = manifest.where((F.col("min_ck") <= 199) & (F.col("max_ck") >= 100)).count()
     assert total >= 8
@@ -280,11 +278,11 @@ def test_dynamic_overwrite_touches_one_partition(spark, sf_dir):
     import os
 
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
-    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import _stage_dir
+    from dateng_data_lakes_apache_spark_spark.staging import staged_dir
 
     qs = get_queries()
     first = {r.o_orderpriority: r.sum_price for r in qs["q_dynamic_overwrite"](spark, sf_dir).collect()}
-    path = _stage_dir(sf_dir, "orders_dynpart")
+    path = staged_dir(sf_dir, "orders_dynpart")
 
     def mtimes(part):
         d = os.path.join(path, f"o_orderpriority={part}")
@@ -368,38 +366,120 @@ def test_avro_roundtrip_when_connector_present(spark, sf_dir, tmp_path):
     assert a == b
 
 
+def _write_table(spark, sf, name, rows):
+    spark.createDataFrame(rows, "k long, v string").write.mode("overwrite").parquet(
+        f"{sf}/{name}.parquet"
+    )
+
+
+def _counting_write(log, tag):
+    """A ``stage_once`` writer that records each call and leaves ``tag``
+    as the staged bytes."""
+
+    def write(path):
+        log.append(tag)
+        os.makedirs(path)
+        with open(os.path.join(path, "data.txt"), "w") as fh:
+            fh.write(tag)
+
+    return write
+
+
+def _staged_bytes(path):
+    with open(os.path.join(path, "data.txt")) as fh:
+        return fh.read()
+
+
 def test_stage_dir_invalidates_on_source_catalog_change(spark, tmp_path):
-    """Mutable-catalog staging guard (r8): a `_SUCCESS`-gated staging
-    must be wiped when the SOURCE catalog's parquet files change —
-    the degenerate sweeps rebuild their catalogs in place, and r8 found
+    """Mutable-catalog staging guard (r8): a staged kind must be
+    rewritten when its SOURCE table's parquet files change — the
+    degenerate sweeps rebuild their catalogs in place, and r8 found
     18 queries serving stale staged bytes from the previous catalog
     shape to one engine."""
-    import os
     import time
 
-    from dateng_data_lakes_apache_spark_spark.sources.roundtrip import (
-        _stage_dir,
-        _staged,
-    )
+    from dateng_data_lakes_apache_spark_spark.staging import stage_once, staged_dir
 
     sf = str(tmp_path / "cat")
-    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(
-        f"{sf}/customer.parquet"
-    )
-    d1 = _stage_dir(sf, "kind_a")
-    os.makedirs(d1, exist_ok=True)
-    open(os.path.join(d1, "_SUCCESS"), "w").close()
-    assert _staged(d1)
+    _write_table(spark, sf, "customer", [(1, "a")])
+    writes = []
+    d1 = stage_once(sf, "customer", "kind_a", _counting_write(writes, "v1"))
+    assert d1 == staged_dir(sf, "kind_a")
+    assert writes == ["v1"] and _staged_bytes(d1) == "v1"
     # same catalog → staging survives a second resolution
-    assert _staged(_stage_dir(sf, "kind_a"))
-    # rewrite the source table (new files/mtimes) → staging is wiped
+    assert stage_once(sf, "customer", "kind_a", _counting_write(writes, "v2")) == d1
+    assert writes == ["v1"] and _staged_bytes(d1) == "v1"
+    # rewrite the source table (new files/mtimes) → staging is rewritten
     time.sleep(0.01)  # ensure a distinct mtime_ns on fast filesystems
-    spark.createDataFrame([(2, "b")], "k long, v string").write.mode(
-        "overwrite"
-    ).parquet(f"{sf}/customer.parquet")
-    d2 = _stage_dir(sf, "kind_a")
+    _write_table(spark, sf, "customer", [(2, "b")])
+    d2 = stage_once(sf, "customer", "kind_a", _counting_write(writes, "v3"))
     assert d2 == d1
-    assert not _staged(d2), "stale staging survived a source-catalog rewrite"
+    assert writes == ["v1", "v3"]
+    assert _staged_bytes(d2) == "v3", "stale staging survived a source-catalog rewrite"
+
+
+def test_stage_once_restages_only_kinds_of_the_changed_table(spark, tmp_path):
+    """Rewriting orders re-stages an orders kind and leaves a customer
+    kind staged: each kind is current against its own source table."""
+    import time
+
+    from dateng_data_lakes_apache_spark_spark.staging import stage_once
+
+    sf = str(tmp_path / "cat")
+    _write_table(spark, sf, "orders", [(1, "a")])
+    _write_table(spark, sf, "customer", [(1, "a")])
+    writes = []
+    stage_once(sf, "orders", "orders_kind", _counting_write(writes, "o1"))
+    cust = stage_once(sf, "customer", "customer_kind", _counting_write(writes, "c1"))
+    time.sleep(0.01)
+    _write_table(spark, sf, "orders", [(2, "b")])
+    stage_once(sf, "orders", "orders_kind", _counting_write(writes, "o2"))
+    assert stage_once(sf, "customer", "customer_kind", _counting_write(writes, "c2")) == cust
+    assert writes == ["o1", "c1", "o2"]
+    assert _staged_bytes(cust) == "c1"
+
+
+def test_stage_once_keeps_same_basename_catalogs_apart(spark, tmp_path):
+    """Two catalogs with the same basename at different paths stage to
+    different dirs: alternating between them never rewrites either."""
+    from dateng_data_lakes_apache_spark_spark.staging import stage_once
+
+    sf_a, sf_b = str(tmp_path / "a" / "sf"), str(tmp_path / "b" / "sf")
+    _write_table(spark, sf_a, "orders", [(1, "a")])
+    _write_table(spark, sf_b, "orders", [(2, "b")])
+    writes = []
+    da = stage_once(sf_a, "orders", "kind", _counting_write(writes, "a"))
+    db = stage_once(sf_b, "orders", "kind", _counting_write(writes, "b"))
+    assert da != db
+    for _ in range(2):
+        assert stage_once(sf_a, "orders", "kind", _counting_write(writes, "a2")) == da
+        assert stage_once(sf_b, "orders", "kind", _counting_write(writes, "b2")) == db
+    assert writes == ["a", "b"]
+    assert (_staged_bytes(da), _staged_bytes(db)) == ("a", "b")
+
+
+def test_stage_once_failed_write_is_not_staged(spark, tmp_path):
+    """A ``write`` that raises leaves no marker behind, so the next call
+    stages again instead of serving the partial dir."""
+    import pytest
+
+    from dateng_data_lakes_apache_spark_spark.staging import stage_once, staged_dir
+
+    sf = str(tmp_path / "cat")
+    _write_table(spark, sf, "orders", [(1, "a")])
+    writes = []
+
+    def failing(path):
+        _counting_write(writes, "partial")(path)
+        raise RuntimeError("write failed")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        stage_once(sf, "orders", "kind", failing)
+    assert not os.path.exists(os.path.join(staged_dir(sf, "kind"), ".staged"))
+    d = stage_once(sf, "orders", "kind", _counting_write(writes, "full"))
+    assert writes == ["partial", "full"]
+    assert _staged_bytes(d) == "full"
+    assert os.path.exists(os.path.join(d, ".staged"))
 
 
 def test_stream_ordered_stage_invalidates_on_events_change(spark, tmp_path):

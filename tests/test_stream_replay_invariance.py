@@ -1,11 +1,12 @@
 """Replay-granularity + state-partition invariance (VERDICT r11 item 3).
 
-The r11 streaming optimization parameterized two replay-harness knobs:
+The r11 streaming optimization fixed two replay-harness constants in
+``stream_queries``:
 
-- ``SPARK_GRAFT_STREAM_REPLAY_FPT`` (files per trigger, default 2): how
-  many of the 4 time-ordered staged event files arrive per micro-batch;
-- ``SPARK_GRAFT_STREAM_STATE_PARTS`` (state partitions, default 4): the
-  shuffle-partition count baked into each stream's state store.
+- ``_REPLAY_FPT`` (files per trigger, 2): how many of the 4
+  time-ordered staged event files arrive per micro-batch;
+- ``_STATE_PARTS`` (state partitions, 4): the shuffle-partition count
+  baked into each stream's state store.
 
 Both were claimed result-invariant ("emission is arithmetic on the FINAL
 watermark") on manual evidence only. These tests PIN the claim: every
@@ -18,8 +19,8 @@ regenerated dataset that breaks the staged files' time ordering) fails
 HERE instead of silently diverging from the fixed DuckDB oracle
 (ADVICE r11 item 3).
 
-Knobs are module attributes read at call time, so the tests swap them
-via monkeypatch.setattr — no env round-trip, no import-order trap.
+Both constants are module attributes read at call time, so the tests
+swap them via monkeypatch.setattr.
 """
 
 from __future__ import annotations
@@ -81,7 +82,7 @@ def test_fpt_knob_list_is_current():
 @pytest.mark.parametrize("name", FPT_QUERIES)
 def test_replay_granularity_invariant(spark, sf_dir, name, monkeypatch):
     """Row sets identical at 1 / 2 / 4 files per trigger."""
-    monkeypatch.setattr(sq, "_REPLAY_FPT", 2)  # the shipped default
+    monkeypatch.setattr(sq, "_REPLAY_FPT", 2)  # the shipped value
     base = _row_multiset(spark, sf_dir, name)
     assert base, f"{name} produced no rows at sf0.001 — vacuous invariance"
     for fpt in (1, 4):
@@ -96,7 +97,7 @@ def test_replay_granularity_invariant(spark, sf_dir, name, monkeypatch):
 @pytest.mark.parametrize("name", PARTS_QUERIES)
 def test_state_partition_count_invariant(spark, sf_dir, name, monkeypatch):
     """Row sets identical at 2 / 4 / 8 state partitions."""
-    monkeypatch.setattr(sq, "_STATE_PARTS", "4")  # the shipped default
+    monkeypatch.setattr(sq, "_STATE_PARTS", "4")  # the shipped value
     base = _row_multiset(spark, sf_dir, name)
     assert base, f"{name} produced no rows at sf0.001 — vacuous invariance"
     for parts in ("2", "8"):

@@ -309,10 +309,11 @@ def test_stream_merge_upsert_keeps_version_history(spark, sf_dir):
     import os
 
     from dateng_data_lakes_apache_spark_spark.registry import get_queries
+    from dateng_data_lakes_apache_spark_spark.staging import _sf_tag
     from dateng_data_lakes_apache_spark_spark.streaming.stream_queries import _SCRATCH
 
     get_queries()["q_stream_merge_upsert"](spark, sf_dir).count()
-    tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    tag = _sf_tag(sf_dir)
     versions = sorted(glob.glob(os.path.join(_SCRATCH, "stream_merge", tag, "v*")))
     # 4-batch replay → one snapshot version per micro-batch, all retained
     # (the rollback/time-travel property the docstring claims).
