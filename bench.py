@@ -9,21 +9,11 @@ materialize without driver collect overhead). Session is the engine
 factory on local[$SPARK_GRAFT_CPUS] with AQE on — the same plan shapes
 a cluster run would get.
 
-Protocol (r6, VERDICT r5 items 3+5):
-- MEDIAN of $SPARK_GRAFT_BENCH_REPEATS runs (default 3) per query; the
-  contract line and the total carry medians, and BENCH_DETAIL.json adds
-  per-query {median, spread, runs} so round-over-round comparison can
-  finally separate real deltas from the ±15-20% single-shot noise.
-- Staged-expectation queries time their BUILDER frame (the real
-  pipeline) — the oracle-plumbing write+re-read that polluted r5's
-  minhash/bpe numbers is not part of the measured query.
-- Session state follows the two boundaries in ``caching``:
-  ``release_session_caches`` after every query (no query borrows a
-  predecessor's index cache or checkpoint blocks), and
-  ``reset_session_state`` after every repeat (the staged memo clears, so
-  each repeat pays what a fresh session would). WITHIN a repeat the memo
-  reuse is deliberate: resolve computes once and its three consumers
-  read the staged artifact, the production shape.
+Protocol: MEDIAN of $SPARK_GRAFT_BENCH_REPEATS passes (default 3) per
+query; the contract line and the total carry medians, and
+BENCH_DETAIL.json adds per-query {median, spread, runs}. Which frame is
+timed, the warm-up and the pass rule are ``harness``'s (its module
+docstring states them once).
 """
 
 from __future__ import annotations
@@ -32,17 +22,10 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from dateng_data_lakes_apache_spark_spark.caching import (
-    release_session_caches,
-    reset_session_state,
-)
-from dateng_data_lakes_apache_spark_spark.registry import get_queries
-from dateng_data_lakes_apache_spark_spark.session import get_spark
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
+from dateng_data_lakes_apache_spark_spark.harness import open_session, time_passes
 
 # The headline set: every operator family is represented (scan/filter,
 # join ladder incl. asof, agg incl. rollup, the window family, sort,
@@ -344,52 +327,12 @@ def print_order(timings: dict[str, float]) -> list[str]:
     return base + fresh + rest
 
 
-def execute_fully(df) -> None:
-    """Run the whole plan through the no-op sink (no driver materialize)."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(os.path.normpath(sf_dir)).replace("sf", "")
-    spark = get_spark(app_name="bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = get_queries()
-
-    # Warm up the JVM / codegen / file index once so the first measured
-    # query isn't charged session-startup costs.
-    execute_fully(queries["q_scan_project"](spark, sf_dir).limit(1))
-    # Warm the Structured-Streaming machinery the same way (micro-batch
-    # executor, state-store provider, memory-sink classes load on first
-    # use — measured ~5-8 s of one-time class-loading/codegen otherwise
-    # charged to whichever q_stream_* runs first). A 1-row rate stream
-    # touches no test data, so no measured query borrows warm state.
-    import uuid as _uuid
-
-    warm = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .option("numPartitions", "1")
-        .load()
-        .writeStream.format("memory")
-        .queryName(f"warm_{_uuid.uuid4().hex[:8]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    warm.awaitTermination()
-
+    spark = open_session("bench", sf_dir)
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
-    runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for _ in range(repeats):
-        for name in HEADLINE:
-            # Staged-expectation queries measure the BUILDER frame — the
-            # real pipeline — not the stage-write + re-read oracle plumbing.
-            fn = STAGED_BUILDERS.get(name) or queries[name]
-            t0 = time.perf_counter()
-            execute_fully(fn(spark, sf_dir))
-            runs[name].append(time.perf_counter() - t0)
-            release_session_caches(spark)
-        reset_session_state(spark)
+    runs = time_passes(spark, sf_dir, HEADLINE, repeats)
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in runs.items()}
     detail = {

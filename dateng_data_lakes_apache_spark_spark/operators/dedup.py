@@ -338,11 +338,10 @@ def minhash_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs(d)
 
 
-def connected_components(
-    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_rounds: int = 12
-) -> DataFrame:
-    """Connected components over candidate pairs by min-label propagation:
-    returns (node, label) where label = min node id in the component.
+def connected_components(pairs: DataFrame, max_rounds: int = 12) -> DataFrame:
+    """Connected components over candidate pairs ``(doc_a, doc_b)`` by
+    min-label propagation: returns (node, label) where label = min node
+    id in the component.
 
     Each round every node adopts the minimum label among itself and its
     neighbors; convergence takes O(graph diameter) rounds. Near-dup
@@ -357,9 +356,9 @@ def connected_components(
     action per round purely as the convergence test.
     """
     # Undirected: materialize both directions once; reused every round.
-    fwd = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    fwd = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = fwd.union(
-        pairs.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     ).persist()
     labels = (
         edges.select(F.col("u").alias("node"))

@@ -29,7 +29,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = 5,
     ckpt_every: int = 3,
-    edge_pre_partition: bool = False,
     check_contract: bool = False,
     dst_closed: bool = False,
 ) -> DataFrame:
@@ -128,20 +127,6 @@ def pagerank(
             deg.select(F.col("src").alias("dst"), F.col("out_deg").alias("dst_deg")),
             "dst",
         )
-    if edge_pre_partition:
-        # r4 task #7 experiment, measured at sf0.1 local[32] (BASELINE.md
-        # r6): NO structural difference — with or without the explicit
-        # repartition, every round plans the SAME BroadcastHashJoin of
-        # the small rank table onto the cached edge index (there is no
-        # edge-side exchange to elide) over the same 64 cached
-        # partitions, and ranks are bit-identical. Wall-clock deltas
-        # between the variants sat inside the noise band once run order
-        # and page-cache warmth were controlled, so the default stays
-        # False (no free shuffle at build time). Kept as an option
-        # because on a real cluster with |V| too big to broadcast the
-        # rounds degrade to SMJ, where pinning hashpartitioning(src) on
-        # the persisted index IS the standard co-location play.
-        indexed = indexed.repartition("src")
     indexed = track(indexed)
     # Every node appears as a SRC: callers stage undirected graphs as
     # both edge directions (the out-degree ≥ 1 contract below), so the

@@ -31,7 +31,8 @@ from .explain import formatted_plan
 #: bench query whose normalized plan is SESSION-DETERMINISTIC (verified
 #: by generating twice in fresh JVMs and diffing — queries whose plans
 #: carry run-varying structure are excluded with a reason below).
-#: Staged-expectation queries pin their BUILDER frame (snapshot_frame).
+#: Each query pins the frame ``harness.timed_frame`` times: staged-
+#: expectation queries pin their BUILDER frame.
 #: Excluded, with reasons:
 #: - q_agg_distinct: count-distinct EXPAND rewrite orders grouping
 #:   columns nondeterministically across sessions (plan PROPERTIES
@@ -154,32 +155,17 @@ def normalized_plan(df: DataFrame) -> str:
     return "\n".join(lines).rstrip() + "\n"
 
 
-def snapshot_frame(spark, sf_dir: str, name: str):
-    """The frame whose plan gets pinned for ``name``.
-
-    Staged-expectation queries (staging.STAGED_BUILDERS) pin the
-    BUILDER frame — the real pipeline where a scale-killer could appear
-    — never the trivial parquet re-read the registered query returns
-    (VERDICT r5 items 1-2: pinning the staged scan made the guard
-    vacuous and let the LSH pipeline plan go unguarded)."""
-    from ..registry import get_queries
-    from ..staging import STAGED_BUILDERS
-
-    qs = get_queries()  # ensures operator modules (and builders) are loaded
-    builder = STAGED_BUILDERS.get(name)
-    return builder(spark, sf_dir) if builder is not None else qs[name](spark, sf_dir)
-
-
 def generate(spark, sf_dir: str = SNAPSHOT_SF_DIR) -> dict[str, str]:
     """(name → normalized plan text) for every snapshot query."""
     from ..caching import release_session_caches
+    from ..harness import timed_frame
 
     # Plans are cache-state-sensitive (a pre-materialized index swaps a
     # scan subtree for InMemoryTableScan); snapshot from a clean slate.
     release_session_caches(spark)
     out = {}
     for name in SNAPSHOT_QUERIES:
-        out[name] = normalized_plan(snapshot_frame(spark, sf_dir, name))
+        out[name] = normalized_plan(timed_frame(spark, sf_dir, name))
         # A builder that track()-persists its index must not leave that
         # cache to perturb the NEXT query's pinned plan.
         release_session_caches(spark)

@@ -10,19 +10,15 @@ tests/; oracled queries get rows/schema/values verdicts from the same
 comparator the pytest parity suite uses (elementwise — stricter than
 the driver's value hash).
 
-Timing protocol v2 (VERDICT r6 item 7): the session is warmed before
-the sweep (the r6 record charged ~17 s of JVM/codegen warm-up to the
-first query), and each entry carries ``sec_spark_median`` /
-``sec_spark_spread`` from SPARK_GRAFT_PARITY_REPEATS (default 3)
-repeats of the Spark side. ``caching.reset_session_state`` runs after
-the warm-up, before every repeat and after every query, so each repeat
-pays what a fresh session pays: the shared dedup resolve is rebuilt
-even for its consumers (q_dedup_cluster_stats, q_dedup_rate_by_source,
-q_split_by_cluster). That is stricter than bench.py, which resets only
-between passes and lets the consumers read the resolve built earlier in
-the same pass. ``sec`` remains the single-shot end-to-end compare time
-(Spark + DuckDB + canonicalization) for continuity; round-over-round
-comparisons should use the medians.
+Timing protocol v3: after the correctness run, each entry carries
+``sec_spark_median`` / ``sec_spark_spread`` over
+SPARK_GRAFT_PARITY_REPEATS (default 3) ``harness.time_passes`` passes
+of that one query, the same frame, warm-up and pass rule as bench.py
+(stated once in the harness module docstring). A resolve consumer
+therefore times its own resolve build, since no earlier query in its
+one-query pass built it. ``sec`` remains the single-shot end-to-end
+compare time (Spark + DuckDB + canonicalization) for continuity;
+round-over-round comparisons should use the medians.
 
 Oracle modes (ADVICE r5): a green hash means different things for
 different oracle kinds, and the report distinguishes them —
@@ -43,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 import traceback
@@ -51,8 +48,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tests"))
 
 from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
+from dateng_data_lakes_apache_spark_spark.harness import open_session, time_passes
 from dateng_data_lakes_apache_spark_spark.registry import get_oracles, get_queries
-from dateng_data_lakes_apache_spark_spark.session import get_spark
 from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 from parity import _canon_frame, duck_connection
 
@@ -76,14 +73,8 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), f"PARITY_r{rnd:02d}.json"
     )
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_PARITY_REPEATS", "3")))
-    spark = get_spark(app_name="parity-report")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = open_session("parity-report", sf_dir)
     queries, oracles = get_queries(), get_oracles()
-
-    # Warm the JVM/codegen/file-listing paths so the first swept query
-    # doesn't absorb session start-up into its recorded time.
-    queries["q_scan_project"](spark, sf_dir).toPandas()
-    reset_session_state(spark)
 
     report: dict[str, dict] = {}
     t_start = time.time()
@@ -91,9 +82,7 @@ def main() -> None:
         entry: dict = {}
         t0 = time.time()
         try:
-            t_run = time.time()
             spark_pdf = fn(spark, sf_dir).toPandas()
-            spark_times = [time.time() - t_run]
             if name in oracles:
                 con = duck_connection(sf_dir)
                 try:
@@ -121,23 +110,8 @@ def main() -> None:
             # single-shot end-to-end compare time (continuity with the
             # pre-v2 records) — captured BEFORE the timing repeats
             entry["sec"] = round(time.time() - t0, 2)
-            # timing repeats: every repeat pays fresh-session costs,
-            # and, like bench, staged queries time their BUILDER frame
-            # so expectation-staging I/O stays out of the measured path
-            fn_timed = STAGED_BUILDERS.get(name)
-            if fn_timed is not None:
-                # the correctness run above timed build+stage+re-read;
-                # drop it from the timing sample so the median is purely
-                # builder-frame runs (n = repeats, same as non-staged)
-                spark_times, n_runs = [], repeats
-            else:
-                fn_timed, n_runs = fn, max(0, repeats - 1)
-            for _ in range(n_runs):
-                reset_session_state(spark)
-                t_run = time.time()
-                fn_timed(spark, sf_dir).toPandas()
-                spark_times.append(time.time() - t_run)
-            mid = sorted(spark_times)[len(spark_times) // 2]
+            spark_times = time_passes(spark, sf_dir, [name], repeats)[name]
+            mid = statistics.median(spark_times)
             entry["sec_spark_median"] = round(mid, 2)
             entry["sec_spark_spread"] = round(max(spark_times) - min(spark_times), 2)
         except Exception as exc:  # noqa: BLE001 — report, don't abort the sweep
@@ -170,7 +144,7 @@ def main() -> None:
         "n_errors": sum(1 for e in report.values() if e.get("mode") == "error"),
         "staged_dependency_owners": dep_owners,
         "staged_dependencies_green": all(_green(report.get(o, {})) for o in dep_owners),
-        "timing_protocol": {"version": 2, "repeats": repeats, "warmed_up": True},
+        "timing_protocol": {"version": 3, "repeats": repeats, "warmed_up": True},
         "total_sec": round(time.time() - t_start, 1),
     }
     with open(out_path, "w") as f:

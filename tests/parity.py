@@ -9,6 +9,7 @@ equality with a clear diff on failure).
 from __future__ import annotations
 
 import math
+import os
 from typing import Any
 
 import duckdb
@@ -18,10 +19,14 @@ from dateng_data_lakes_apache_spark_spark.catalog import TABLES, table_path
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB views over the catalog's tables; a table that Spark wrote
+    as a parquet directory (the degenerate catalogs) is globbed."""
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+        path = table_path(sf_dir, t)
+        src = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     return con
 
 
@@ -57,6 +62,24 @@ def _canon_frame(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows, key=repr)
 
 
+def oracle_diff(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> str | None:
+    """Why the Spark result differs from the DuckDB oracle's (column
+    names, row count, then order-insensitive values with up to 5
+    differing rows shown), or None when they match."""
+    if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
+        return f"column mismatch: spark={sorted(spark_pdf.columns)} duck={sorted(duck_pdf.columns)}"
+    if len(spark_pdf) != len(duck_pdf):
+        return f"row count mismatch: spark={len(spark_pdf)} duck={len(duck_pdf)}"
+    s_rows = _canon_frame(spark_pdf)
+    d_rows = _canon_frame(duck_pdf)
+    if s_rows == d_rows:
+        return None
+    diffs = [(i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b][:5]
+    return f"value mismatch ({len(diffs)}+ differing rows shown):\n" + "\n".join(
+        f"  row {i}:\n    spark={a}\n    duck ={b}" for i, a, b in diffs
+    )
+
+
 def compare_query(spark, sf_dir: str, fn, oracle: str) -> None:
     """Assert Spark result == DuckDB oracle result (order-insensitive)."""
     spark_pdf = fn(spark, sf_dir).toPandas()
@@ -65,20 +88,6 @@ def compare_query(spark, sf_dir: str, fn, oracle: str) -> None:
         duck_pdf = con.execute(oracle).df()
     finally:
         con.close()
-
-    assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
-        f"column mismatch: spark={sorted(spark_pdf.columns)} duck={sorted(duck_pdf.columns)}"
-    )
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"row count mismatch: spark={len(spark_pdf)} duck={len(duck_pdf)}"
-    )
-    s_rows = _canon_frame(spark_pdf)
-    d_rows = _canon_frame(duck_pdf)
-    if s_rows != d_rows:
-        diffs = [
-            (i, a, b) for i, (a, b) in enumerate(zip(s_rows, d_rows)) if a != b
-        ][:5]
-        raise AssertionError(
-            f"value mismatch ({len(diffs)}+ differing rows shown):\n"
-            + "\n".join(f"  row {i}:\n    spark={a}\n    duck ={b}" for i, a, b in diffs)
-        )
+    diff = oracle_diff(spark_pdf, duck_pdf)
+    if diff is not None:
+        raise AssertionError(diff)

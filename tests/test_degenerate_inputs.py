@@ -271,26 +271,11 @@ _HOSTILE_VALUE_PINNED = [
 
 
 def _value_parity(spark, catalog, name):
-    import duckdb
-
     from dateng_data_lakes_apache_spark_spark.registry import get_oracles
 
-    from .parity import _canon_frame
+    from .parity import compare_query
 
-    spark_pdf = get_queries()[name](spark, catalog).toPandas()
-    con = duckdb.connect()
-    try:
-        for t in _TABLES:
-            p = os.path.join(catalog, f"{t}.parquet")
-            src = f"{p}/*.parquet" if os.path.isdir(p) else p
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
-        duck_pdf = con.execute(get_oracles()[name]).df()
-    finally:
-        con.close()
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"{name}: rows {len(spark_pdf)} vs {len(duck_pdf)}"
-    )
-    assert _canon_frame(spark_pdf) == _canon_frame(duck_pdf)
+    compare_query(spark, catalog, get_queries()[name], get_oracles()[name])
 
 
 @pytest.mark.parametrize("name", _HOSTILE_VALUE_PINNED)

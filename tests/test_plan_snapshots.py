@@ -2,7 +2,7 @@
 
 PLANS/ pins the full normalized physical plan of the top-cost bench
 queries (staged-expectation queries pin their pre-staging BUILDER frame
-— see plans.snapshot.snapshot_frame); this test regenerates every plan
+— see harness.timed_frame); this test regenerates every plan
 against the live engine and fails on ANY drift, so optimizer/plan
 regressions surface as a git diff of the artifact, not just a broken
 property assert. To accept an intentional plan change, re-run:

@@ -7,13 +7,15 @@ DuckDB oracle there — the class of defect the run-only sweep cannot see
 exception, and only an oracle compare catches that).
 
 Every oracled query runs through the same elementwise comparator as
-the parity suite against each degenerate catalog. Staged-expectation
-queries are skipped (their oracle reads bytes the query stages — a
+the parity suite (``tests/parity.oracle_diff``) against each
+degenerate catalog, and a mismatch prints its differing rows; name one
+query in SPARK_GRAFT_SWEEP_ONLY to triage it on one variant.
+Staged-expectation queries are skipped (their oracle reads bytes the query stages — a
 roundtrip compare is vacuous for value-level dirt detection); they are
 covered by the run-only sweep plus their unit properties.
 
-Usage: python tools/degenerate_oracle_sweep.py [empty one hostile ties ...]
-(no args = degenerate_sweep.DEFAULT_VARIANTS)
+Usage: [SPARK_GRAFT_SWEEP_ONLY=q_a,q_b] python tools/degenerate_oracle_sweep.py
+       [empty one hostile ties ...]  (no args = degenerate_sweep.DEFAULT_VARIANTS)
 Exit 1 on any mismatch/error. Catalogs are built (or reused) under
 .scratch/degcat/ by degenerate_sweep.build.
 """
@@ -28,9 +30,7 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
 )
 
-import duckdb
-
-from degenerate_sweep import DEFAULT_VARIANTS, TABLES, build
+from degenerate_sweep import DEFAULT_VARIANTS, build
 
 #: Skipped ONLY on the ``unicode`` catalog, and printed loudly: these
 #: two queries exist to showcase Spark's upper()/lower(), whose Unicode
@@ -44,20 +44,8 @@ from degenerate_sweep import DEFAULT_VARIANTS, TABLES, build
 UNICODE_TAILORING_EXEMPT = {"q_string_funcs", "q_array_setops"}
 
 
-def degenerate_duck_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
-    """Like tests.parity.duck_connection, but glob-reads the Spark-written
-    parquet DIRECTORIES the degenerate catalogs use."""
-    con = duckdb.connect()
-    con.execute("SET TimeZone='UTC'")
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        src = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
-    return con
-
-
 def main() -> None:
-    from parity import _canon_frame
+    from parity import duck_connection, oracle_diff
 
     from dateng_data_lakes_apache_spark_spark.caching import reset_session_state
     from dateng_data_lakes_apache_spark_spark.registry import get_oracles, get_queries
@@ -86,19 +74,14 @@ def main() -> None:
                 continue
             try:
                 spark_pdf = qs[name](spark, sf).toPandas()
-                con = degenerate_duck_connection(sf)
+                con = duck_connection(sf)
                 try:
                     duck_pdf = con.execute(oracles[name]).df()
                 finally:
                     con.close()
-                if len(spark_pdf) != len(duck_pdf):
-                    bad[name] = f"rows {len(spark_pdf)} vs {len(duck_pdf)}"
-                elif sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
-                    bad[name] = "schema mismatch"
-                elif _canon_frame(spark_pdf) != _canon_frame(duck_pdf):
-                    s, d = _canon_frame(spark_pdf), _canon_frame(duck_pdf)
-                    diff = next((i, a, b) for i, (a, b) in enumerate(zip(s, d)) if a != b)
-                    bad[name] = f"values differ at row {diff[0]}: {diff[1]!r} vs {diff[2]!r}"[:300]
+                diff = oracle_diff(spark_pdf, duck_pdf)
+                if diff is not None:
+                    bad[name] = diff
             except Exception as exc:  # noqa: BLE001 — a sweep reports, never stops
                 bad[name] = f"{type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
             if name in bad:

@@ -79,7 +79,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -436,23 +435,16 @@ def main() -> None:
     if only:
         keep = {n.strip() for n in only.split(",") if n.strip()}
         qs = {n: f for n, f in qs.items() if n in keep}
-    verbose = bool(os.environ.get("SPARK_GRAFT_SWEEP_VERBOSE"))
     total_fails = 0
     for variant in variants:
         sf = build(spark, variant)
         fails = {}
         for name, fn in qs.items():
-            t0 = time.perf_counter()
             try:
                 fn(spark, sf).collect()
             except Exception as exc:  # noqa: BLE001 — a sweep reports, never stops
                 fails[name] = f"{type(exc).__name__}: {str(exc).splitlines()[0][:160]}"
                 print(f"[{variant}] {name}: {fails[name]}", flush=True)
-            if verbose:
-                print(
-                    f"[{variant}] {name}: {time.perf_counter() - t0:.1f}s",
-                    flush=True,
-                )
         reset_session_state(spark)
         total_fails += len(fails)
         print(f"=== {variant}: {len(fails)} failures / {len(qs)} queries", flush=True)

@@ -4,11 +4,13 @@ Usage:
     python tools/opt_probe.py [--repeats N] [--plans-dir plans/r11] \
         [--tag before|after] q_name [q_name ...]
 
-For each query: builds the frame (staged queries use their BUILDER frame,
-same as bench.py), times ``noop``-sink execution median-of-N, and writes
-``<plans-dir>/<name>_<tag>.txt`` with the formatted physical plan.
-Session/env contract identical to bench.py ($SPARK_GRAFT_SF_DIR,
-$SPARK_GRAFT_CPUS) so numbers are comparable.
+Times the named queries with ``harness.time_passes`` (median of N
+passes; ``--repeats 0`` captures plans only), so its numbers are what
+bench.py measures on that subset; the harness module docstring states
+the frame choice, warm-up and pass rule. With ``--plans-dir`` it also
+writes ``<plans-dir>/<name>_<tag>.txt``, the formatted physical plan of
+an untimed ``harness.timed_frame`` build. Session/env contract
+identical to bench.py ($SPARK_GRAFT_SF_DIR, $SPARK_GRAFT_CPUS).
 """
 
 from __future__ import annotations
@@ -18,18 +20,16 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from dateng_data_lakes_apache_spark_spark.caching import (
-    release_session_caches,
-    reset_session_state,
+from dateng_data_lakes_apache_spark_spark.caching import release_session_caches
+from dateng_data_lakes_apache_spark_spark.harness import (
+    open_session,
+    time_passes,
+    timed_frame,
 )
 from dateng_data_lakes_apache_spark_spark.plans.explain import formatted_plan
-from dateng_data_lakes_apache_spark_spark.registry import get_queries
-from dateng_data_lakes_apache_spark_spark.session import get_spark
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
 
 def main() -> None:
@@ -38,56 +38,25 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--tag", default=None)
-    ap.add_argument("--no-time", action="store_true", help="plan capture only")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="opt_probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = get_queries()
+    spark = open_session("opt_probe", sf_dir)
 
-    # Same warmups as bench.py so query 1 isn't charged session startup.
-    queries["q_scan_project"](spark, sf_dir).limit(1).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    if any("stream" in n for n in args.names):
-        import uuid
-
-        warm = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "1")
-            .option("numPartitions", "1")
-            .load()
-            .writeStream.format("memory")
-            .queryName(f"warm_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        warm.awaitTermination()
-
-    out: dict[str, dict] = {}
-    for name in args.names:
-        fn = STAGED_BUILDERS.get(name) or queries[name]
-        spark.sparkContext.setJobDescription(f"opt_probe:{name}")
-        runs = []
-        reps = 1 if args.no_time else args.repeats
-        for i in range(reps):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-            if args.plans_dir and i == 0:
-                os.makedirs(args.plans_dir, exist_ok=True)
-                tag = f"_{args.tag}" if args.tag else ""
-                with open(os.path.join(args.plans_dir, f"{name}{tag}.txt"), "w") as f:
-                    f.write(formatted_plan(df))
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
+        tag = f"_{args.tag}" if args.tag else ""
+        for name in args.names:
+            with open(os.path.join(args.plans_dir, f"{name}{tag}.txt"), "w") as f:
+                f.write(formatted_plan(timed_frame(spark, sf_dir, name)))
             release_session_caches(spark)
-        reset_session_state(spark)
-        out[name] = {
-            "median": round(statistics.median(runs), 3),
-            "runs": [round(t, 3) for t in runs],
-        }
-        print(json.dumps({name: out[name]}), flush=True)
+
+    runs = time_passes(spark, sf_dir, args.names, args.repeats)
+    out = {
+        name: {"median": round(statistics.median(ts), 3), "runs": [round(t, 3) for t in ts]}
+        for name, ts in runs.items()
+        if ts
+    }
     print(json.dumps({"probe": out}))
 
 

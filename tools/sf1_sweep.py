@@ -19,10 +19,13 @@ No driver-generated sf1 testdata exists, so this tool synthesizes a
 
 The sweep times each heavyweight at sf0.1 and at the synthetic 10x and
 prints a slope table (ratio / 10 = per-unit-data cost change; ~1.0 is
-linear). Staged-expectation queries time their BUILDER frame, same as
-bench.py. Results land in BASELINE.md's scaling section by hand.
+linear). Each point is the median of ``harness.time_passes`` passes 1-2
+(pass 0 is discarded), so frame choice, warm-up and pass rule are
+bench.py's (stated once in the harness module docstring). Results land
+in BASELINE.md's scaling section by hand.
 
-Usage: python tools/sf1_sweep.py [--gen-only|--sweep-only]
+Usage: python tools/sf1_sweep.py [--gen-only|--sweep-only|--isolated]
+($SF1_SWEEP_NAMES, comma-separated, narrows the swept names)
 """
 
 from __future__ import annotations
@@ -31,7 +34,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -202,63 +204,42 @@ def generate(spark) -> None:
             os.symlink(f"{SF01}/{t}.parquet", dst)
 
 
+#: Consumers of the shared dedup resolve: each is timed in a pass that
+#: first builds the resolve for the same sf, the production shape.
+RESOLVE_CONSUMERS = {"q_dedup_cluster_stats", "q_dedup_rate_by_source"}
+
+
+def _names() -> list[str]:
+    only = os.environ.get("SF1_SWEEP_NAMES", "")
+    return [n.strip() for n in only.split(",") if n.strip()] or HEAVYWEIGHTS
+
+
 def sweep(spark) -> dict:
-    from dateng_data_lakes_apache_spark_spark.caching import (
-        release_session_caches,
-        reset_session_state,
-    )
-    from dateng_data_lakes_apache_spark_spark.registry import get_queries
-    from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
+    from dateng_data_lakes_apache_spark_spark.harness import time_passes
 
-    qs = get_queries()
     result: dict[str, dict] = {}
-
-    def run_once(name: str, sf_dir: str) -> float:
-        fn = STAGED_BUILDERS.get(name) or qs[name]
-        # The tick stream's scale knob is row count, not catalog bytes.
-        tick_env = TICK_10X if (name == "q_python_stream_source" and sf_dir == SF1X) else {}
-        saved = {k: os.environ.get(k) for k in tick_env}
-        os.environ.update(tick_env)
-        try:
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
-        release_session_caches(spark)
-        return dt
-
-    only = os.environ.get("SF1_SWEEP_ONLY")
-    names = [only] if only else HEAVYWEIGHTS
-    for name in names:
+    for name in _names():
         times: dict[str, float] = {}
+        passes = ["q_dedup_resolve", name] if name in RESOLVE_CONSUMERS else [name]
         for tag, sf_dir in (("sf0.1", SF01), ("sf1x", SF1X)):
-            runs = []
-            # 3 runs, FIRST DISCARDED: run 1 pays one-time codegen
-            # compilation (the 16-perm minhash expressions alone are
-            # seconds of janino work) — charging it to whichever sf
-            # runs first corrupted the slope in the first version of
-            # this sweep (a "10x data runs 2x faster" artifact).
-            for i in range(3):
-                if name in ("q_dedup_minhash", "q_dedup_resolve"):
-                    reset_session_state(spark)
-                elif name in ("q_dedup_cluster_stats", "q_dedup_rate_by_source"):
-                    # Production shape: consumers read the staged
-                    # resolve artifact for THIS sf — build it untimed
-                    # once, keep it across the consumer's runs.
-                    if i == 0:
-                        reset_session_state(spark)
-                        qs["q_dedup_resolve"](spark, sf_dir).write.format(
-                            "noop"
-                        ).mode("overwrite").save()
-                dt = run_once(name, sf_dir)
-                if i > 0:
-                    runs.append(dt)
-            times[tag] = round(statistics.median(runs), 2)
+            # The tick stream's scale knob is row count, not catalog bytes.
+            tick_env = TICK_10X if (name == "q_python_stream_source" and sf_dir == SF1X) else {}
+            saved = {k: os.environ.get(k) for k in tick_env}
+            os.environ.update(tick_env)
+            try:
+                runs = time_passes(spark, sf_dir, passes, 3)[name]
+            finally:
+                for k, v in saved.items():
+                    if v is None:
+                        os.environ.pop(k, None)
+                    else:
+                        os.environ[k] = v
+            # Pass 0 DISCARDED: it pays one-time codegen compilation (the
+            # 16-perm minhash expressions alone are seconds of janino
+            # work) — charging it to whichever sf runs first corrupted
+            # the slope in the first version of this sweep (a "10x data
+            # runs 2x faster" artifact).
+            times[tag] = round(statistics.median(runs[1:]), 2)
         ratio = round(times["sf1x"] / max(times["sf0.1"], 1e-9), 2)
         result[name] = {**times, "ratio_10x": ratio, "per_unit": round(ratio / REPLICAS, 2)}
         print(name, result[name], flush=True)
@@ -272,17 +253,13 @@ def sweep_isolated() -> dict:
     heavyweights: in the r8 run it measured q_graph_bfs at sf1x 144 s
     where a fresh session measures 14 s (and pagerank 32 s at sf0.1 vs
     its 9 s bench median). Slopes from a degrading session are not
-    scaling data. Each subprocess still runs the 3-runs-first-discarded
-    protocol per sf via SF1_SWEEP_ONLY."""
+    scaling data. Each subprocess sweeps its one name, passed through
+    SF1_SWEEP_NAMES."""
     import subprocess
 
     result: dict[str, dict] = {}
-    only = os.environ.get("SF1_SWEEP_NAMES", "")
-    names = (
-        [n.strip() for n in only.split(",") if n.strip()] if only else HEAVYWEIGHTS
-    )
-    for name in names:
-        env = dict(os.environ, SF1_SWEEP_ONLY=name)
+    for name in _names():
+        env = dict(os.environ, SF1_SWEEP_NAMES=name)
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--sweep-only"],
             env=env,
@@ -300,15 +277,14 @@ def sweep_isolated() -> dict:
 
 
 def main() -> None:
-    from dateng_data_lakes_apache_spark_spark.session import get_spark
+    from dateng_data_lakes_apache_spark_spark.harness import open_session
 
     mode = sys.argv[1] if len(sys.argv) > 1 else ""
     if mode == "--isolated":
         out = sweep_isolated()
         print("ISOLATED " + json.dumps(out, indent=1))
         return
-    spark = get_spark(app_name="sf1-sweep")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = open_session("sf1-sweep", SF01)
     if mode != "--sweep-only":
         if (
             not os.path.exists(f"{SF1X}/lineitem.parquet")
