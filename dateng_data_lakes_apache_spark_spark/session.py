@@ -12,12 +12,28 @@ pinned to ``Int.MaxValue``), since a "distributed" listing job there
 runs the same stat calls on the driver JVM's own threads plus one task
 per path. Any other master keeps Spark's default, which lists more than
 32 paths with a job: the right call against an object store.
+
+A second local-mode rule binds ``file://`` to the engine's own Hadoop
+filesystem (``jvm/src/dateng/localfs``, built into ``jvm/dateng-localfs.jar``
+by ``tools/build_localfs_jar.py``). Without native libhadoop, Hadoop's
+local filesystem forks a ``chmod`` process to set the mode of every file,
+``.crc`` sidecar and directory it creates: ~5 ms of CPU each, ~295 forks
+per star-schema ingest plus streaming replay. The engine's class sets the
+same nine mode bits through java.nio instead and changes nothing else;
+with libhadoop loaded, or for a sticky/setuid mode, it defers to Hadoop.
+The confs are set only when the class will load in the session's JVM:
+``get_spark`` launches that JVM itself (so it can put the jar on the
+driver classpath), or the running JVM already loads the class. A session
+started elsewhere (spark-submit, a driver's own builder), a missing jar
+or any other master keeps Hadoop's stock classes; object stores and
+HDFS do not fork.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Configs that define the engine's semantics + 100 TB posture.
@@ -84,6 +100,28 @@ def ensure_semantic_confs(spark: SparkSession) -> None:
             pass  # conf locked down (e.g. Connect) — proceed with session defaults
 
 
+#: The engine's local filesystem, and the Hadoop confs that bind ``file://`` to it.
+LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "dateng-localfs.jar")
+LOCALFS_CONF: dict[str, str] = {
+    "spark.hadoop.fs.file.impl": "dateng.localfs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "dateng.localfs.NioLocalFs",
+}
+
+
+def _localfs_loads(jar: str) -> bool:
+    """Whether the session about to be built can load the engine's
+    local filesystem: ``get_spark`` will launch its JVM with ``jar`` on
+    the classpath, or the JVM already running loads the class."""
+    if not os.path.isfile(jar):
+        return False
+    jvm = SparkContext._jvm
+    if jvm is None:
+        # No JVM yet. A spark-submit'd Python process connects to the
+        # submitting JVM, whose classpath is not ours to extend.
+        return "PYSPARK_GATEWAY_PORT" not in os.environ
+    return bool(jvm.org.apache.spark.util.Utils.classIsLoadable(LOCALFS_CONF["spark.hadoop.fs.file.impl"]))
+
+
 def get_spark(
     app_name: str = "dateng-data-lakes",
     master: str | None = None,
@@ -110,13 +148,22 @@ def get_spark(
         conf["spark.sql.shuffle.partitions"] = os.environ.get(
             "SPARK_GRAFT_SHUFFLE_PARTITIONS", "64"
         )
-    if master and (master == "local" or master.startswith("local[")):
+    local = bool(master) and (master == "local" or master.startswith("local["))
+    if local:
         # Executors are threads of this JVM, so a listing job makes the
         # same stat calls as the driver would, plus a job with one task
         # per path. On a cluster, Spark's default stands.
         conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = "2147483647"
     if extra_conf:
         conf.update(extra_conf)
+    if local and _localfs_loads(LOCALFS_JAR):
+        # Local files are written by this JVM: set their modes without
+        # forking chmod (module docstring). The caller's own classpath
+        # and filesystem bindings stand.
+        cp = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = f"{cp}{os.pathsep}{LOCALFS_JAR}" if cp else LOCALFS_JAR
+        for k, v in LOCALFS_CONF.items():
+            conf.setdefault(k, v)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -47,6 +47,7 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from .catalog import table_manifest
 from .scratch import SCRATCH
@@ -181,7 +182,28 @@ def stage_expectation(df: DataFrame, name: str, sf_dir: str) -> DataFrame:
     out = _stage_dir(name, sf_dir)
     df.coalesce(4).write.mode("overwrite").parquet(out)
     repoint_current(name, sf_dir)
-    return df.sparkSession.read.parquet(out)
+    return read_staged(df.sparkSession, out, df.schema)
+
+
+def read_staged(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """Read back the parquet a frame of ``schema`` wrote to ``path``.
+
+    Spark writes every field nullable (nested ones too), so that is the
+    schema an inferring read would find; supplying it skips the footer
+    job inference fires."""
+    return spark.read.schema(_nullable(schema)).parquet(path)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable:
+    the schema Spark stores in the parquet it writes."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def _stage_dir(name: str, sf_dir: str) -> str:

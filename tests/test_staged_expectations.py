@@ -19,9 +19,14 @@ import pytest
 
 from dateng_data_lakes_apache_spark_spark.caching import release_caches
 from dateng_data_lakes_apache_spark_spark.registry import get_queries
-from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
+from dateng_data_lakes_apache_spark_spark.staging import (
+    STAGED_BUILDERS,
+    _stage_dir,
+    read_staged,
+    stage_expectation,
+)
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, jobs_fired
 
 #: Every query whose oracle is a staged expectation. Keep in sync with
 #: staged_oracle() call sites — test_staged_inventory below enforces
@@ -93,3 +98,30 @@ def test_staged_inventory_is_complete():
         "every staged query must register its pre-staging builder frame "
         f"(missing: {sorted(names - set(STAGED_BUILDERS))})"
     )
+
+
+#: The staged queries the build-jobs lint builds (tests/test_plan_lint.py
+#: allow-lists their build for the staging write alone).
+STAGED_LINTED = [
+    "q_agg_approx_distinct",
+    "q_agg_approx_quantile",
+    "q_bloom_membership",
+    "q_dedup_minhash",
+    "q_dedup_simhash",
+    "q_sketch_count_min",
+]
+
+
+@pytest.mark.parametrize("name", STAGED_LINTED)
+def test_staged_reread_fires_no_job_and_equals_inferred_read(spark, name):
+    """The re-read supplies the written frame's schema, made nullable,
+    instead of inferring it from the footers with a job; schema and rows
+    equal an inferring read of the same bytes."""
+    built = STAGED_BUILDERS[name](spark, SF_SMALL)
+    staged = stage_expectation(built, name, SF_SMALL)
+    path = _stage_dir(name, SF_SMALL)
+    assert jobs_fired(spark, lambda: read_staged(spark, path, built.schema)) == 0
+    inferred = spark.read.parquet(path)
+    assert staged.schema == inferred.schema
+    assert _canon(staged) == _canon(inferred)
+    release_caches()
