@@ -34,9 +34,18 @@ file already forces a fresh inference, and a memoized schema is the
 schema a fresh session would infer from the same files. Clearing it
 would only re-add one footer-inference job per table read.
 
-Loop-internal persists that unpersist within their own builder (label
-propagation rounds, sketch scratch tables) are deliberately NOT tracked:
-they never outlive the call, so there is nothing for the session to own.
+The round rule: every iterative operator (connected components, BFS,
+the k-means and PQ Lloyd rounds; PageRank every third round) carries
+its state from round to round through :func:`advance`, which eagerly
+checkpoints the new round, registers its blocks here and frees the
+previous round's. So a loop holds one round's blocks at a time, its last
+round is released with the session's other caches, and the checkpoint's
+job is the round's only job: a loop that needs a per-round answer (did
+any label change?) reads it from an ``Observation`` on the round's
+frame. A checkpoint has no lineage left, so results derived from it
+must be materialized before the session releases it. A loop's fixed
+input (the components' edge list) is persisted and unpersisted within
+the call, so the session never owns it.
 """
 
 from __future__ import annotations
@@ -72,70 +81,32 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
-def local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint`` with the checkpoint blocks registered for
-    release.
+def advance(prev: DataFrame | None, new: DataFrame) -> DataFrame:
+    """One round of an iterative operator: eagerly ``localCheckpoint``
+    ``new``, register its blocks for session release, and free
+    ``prev``'s blocks if ``prev`` is the frame an earlier ``advance``
+    returned (anything else, such as a loop's seed frame, is left alone).
 
-    Iterative operators (label propagation, PageRank, Lloyd rounds)
-    checkpoint per round to truncate lineage; those blocks are RDD-level
-    storage invisible to the CacheManager, so without tracking they
-    outlive every unpersist/clearCache a session can issue. NOTE:
-    releasing a checkpoint is final — a checkpointed frame has no
-    lineage left to recompute from, so results derived from index
-    queries must be materialized (collected/written) before release.
-
-    Iterative loops should call :func:`release_superseded` on the
-    PREVIOUS round's checkpointed frame once the new round is
-    materialized (eager=True) and any old-vs-new comparison has run —
-    otherwise every superseded round's blocks pile up in executor
-    storage until the session-level release (ADVICE r4).
+    ``new`` may read ``prev``: the checkpoint's job materializes ``new``
+    (and fills any ``Observation`` on it) before ``prev`` is freed.
     """
-    out = df.localCheckpoint(eager=eager)
-    entry = ("rdd", out._jdf.queryExecution().analyzed().rdd())
-    # Stash the exact registry entry on the frame so release_superseded
-    # can drop it by identity (py4j __eq__ round-trips to the JVM).
-    out._sg_ckpt_entry = entry
+    out = new.localCheckpoint(eager=True)
     with _LOCK:
-        _TRACKED.append(entry)
+        _TRACKED.append(("rdd", _checkpoint_rdd(out)))
+    old = _checkpoint_rdd(prev) if prev is not None else None
+    if old is not None:
+        rid = old.id()
+        with _LOCK:
+            hits = [i for i, (kind, h) in enumerate(_TRACKED) if kind == "rdd" and h.id() == rid]
+            mine = [_TRACKED.pop(i) for i in reversed(hits)]
+        _release(mine)
     return out
 
 
-def release_superseded(df: DataFrame) -> bool:
-    """Free a superseded round's localCheckpoint blocks immediately.
-
-    Only frames produced by :func:`local_checkpoint` carry blocks to
-    free; anything else (the round-0 seed frame, an already-released
-    frame) is a no-op returning False. Callers must be done with ``df``
-    — a released checkpoint has no lineage to recompute from.
-
-    WARNING (ADVICE r5): the block handle rides on the EXACT DataFrame
-    object :func:`local_checkpoint` returned — passing any derived or
-    re-wrapped frame (``ckpt.select(...)``, ``ckpt.alias(...)``) finds
-    no handle and silently leaks the blocks. Iterative loops must keep
-    the checkpointed frame itself for the release call; tests assert
-    each loop's release returns True after round 1
-    (tests/test_caching.py).
-    """
-    entry = getattr(df, "_sg_ckpt_entry", None)
-    if entry is None:
-        # Loud enough to diagnose a leaking loop, quiet enough for the
-        # legitimate round-0-seed no-op (debug level).
-        _LOG.debug(
-            "release_superseded: frame carries no checkpoint handle "
-            "(round-0 seed, already released, or a DERIVED frame — "
-            "derived frames leak the original's blocks)"
-        )
-        return False
-    df._sg_ckpt_entry = None
-    with _LOCK:
-        for i, e in enumerate(_TRACKED):
-            if e is entry:
-                del _TRACKED[i]
-                break
-        else:
-            return False  # already drained by a session-level release
-    _release([entry])
-    return True
+def _checkpoint_rdd(df: DataFrame) -> Any:
+    """The JVM RDD behind a localCheckpoint'd frame, else None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
 
 
 def _release(entries: list[tuple[str, Any]]) -> int:

@@ -11,10 +11,10 @@ The core training-data-pipeline family. Design rules for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import local_checkpoint, release_superseded, track
+from ..caching import advance, track
 from ..catalog import table
 from ..common import spread
 from ..registry import query
@@ -352,56 +352,35 @@ def connected_components(pairs: DataFrame, max_rounds: int = 12) -> DataFrame:
     labels. Per-round cost is one equi-join edges⋈labels plus a groupBy
     min — all hash-partitioned on node id, no cross-product, no
     collect: the same shape GraphX/GraphFrames uses, expressed in plain
-    DataFrame ops. The driver-side loop runs one tiny `limit(1).count()`
-    action per round purely as the convergence test.
+    DataFrame ops. The round's ``groupBy(node)`` keeps each node's old
+    label next to its new one, and an ``Observation`` on that aggregate
+    counts the labels that fell, so the round's checkpoint job is also
+    its convergence test.
     """
     # Undirected: materialize both directions once; reused every round.
     fwd = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     edges = fwd.union(
         pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     ).persist()
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .persist()
-    )
-    for round_no in range(max_rounds):
-        neighbor_min = (
-            edges.join(labels, edges.u == labels.node)
-            .select(F.col("v").alias("node"), "label")
+    labels = edges.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node"))
+    for _ in range(max_rounds):
+        neighbor_min = edges.join(labels, edges.u == labels.node).select(
+            F.col("v").alias("node"), "label", F.lit(None).alias("old")
         )
+        changed = Observation()
         new_labels = (
-            labels.unionByName(neighbor_min)
+            labels.select("node", "label", F.col("label").alias("old"))
+            .unionByName(neighbor_min)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
+            .observe(changed, F.count(F.when(F.col("label") < F.col("old"), 1)).alias("n"))
+            .select("node", "label")
         )
-        # localCheckpoint truncates the per-round lineage growth so the
-        # plan (and task closure) stays O(1) across iterations; routed
-        # through the cache registry so the blocks release with the session.
-        new_labels = local_checkpoint(new_labels, eager=True)
-        # Convergence test costs one extra (tiny) job per round; skip it on
-        # round 0 — any graph with an edge changes at least one label there.
-        changed = 1
-        if round_no > 0:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-                .where(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-        labels.unpersist()
-        # The convergence join above was the last reader of the previous
-        # round — free its checkpoint blocks NOW instead of letting every
-        # superseded round pile up until session release (ADVICE r4).
-        release_superseded(labels)
-        labels = new_labels
-        if changed == 0:
+        labels = advance(labels, new_labels)
+        if changed.get["n"] == 0:
             break
     else:
         edges.unpersist()
-        release_superseded(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_rounds} rounds: "
             "labels were still changing in the last round"

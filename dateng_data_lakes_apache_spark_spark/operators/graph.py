@@ -17,18 +17,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import local_checkpoint, release_superseded, track
+from ..caching import advance, track
 from ..catalog import table
 from ..registry import query
 
 _SCALE = 10**12
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as exact integer ratio
+#: PageRank checkpoints its state every this many rounds (see pagerank).
+_CKPT_EVERY = 3
 
 
 def pagerank(
     edges: DataFrame,
     iters: int = 5,
-    ckpt_every: int = 3,
     check_contract: bool = False,
     dst_closed: bool = False,
 ) -> DataFrame:
@@ -42,18 +43,13 @@ def pagerank(
     The edge list is persisted once with its out-degrees precomputed —
     at 100 TB that is the graph index you'd materialize anyway.
 
-    Lineage control: the rank table is checkpointed every ``ckpt_every``
-    rounds. Without it the 5-round chain re-plans the full tree per
-    round — measured 19.7 s at sf0.1 on Spark 4.1, vs 9.2 s with
-    ckpt_every=2 + the node table persisted (bit-identical ranks; the
-    re-planning, not the data, was the cost). With the r9 fused |V|
-    state the sweet spot moved to ckpt_every=3 — one eager cut for 5
-    rounds (a localCheckpoint is itself a blocking action; the A/B:
-    ck=2 ~7.6 s vs ck=3 ~6.8 s at sf0.1, identical ranks). ``localCheckpoint`` uses
-    executor-local storage — right for a bounded-iteration batch job;
-    on a shared/preemptible cluster use ``spark.sparkContext.
-    setCheckpointDir`` + ``.checkpoint()`` for a fault-tolerant cut at
-    the price of a distributed write per cut.
+    Lineage control: the rank table is checkpointed every
+    ``_CKPT_EVERY`` = 3 rounds. Without a cut the 5-round chain re-plans
+    the full tree per round (19.7 s at sf0.1 on Spark 4.1, vs 9.2 s
+    cutting every 2nd round; the re-planning, not the data, was the
+    cost). With the fused |V| state one eager cut for 5 rounds measured
+    best (a checkpoint is itself a blocking job: every 2nd round ~7.6 s
+    vs every 3rd ~6.8 s at sf0.1, identical ranks).
 
     Nodes must all have out-degree ≥ 1 (callers stage undirected graphs
     as both edge directions), which sidesteps dangling-mass
@@ -211,13 +207,8 @@ def pagerank(
                     ).alias("contrib"),
                 )
             )
-        if ckpt_every and (it + 1) % ckpt_every == 0 and it + 1 < iters:
-            state = local_checkpoint(state)
-            # The new checkpoint is materialized (eager) — the previous
-            # round's blocks have no remaining reader (ADVICE r4).
-            if prev_ckpt is not None:
-                release_superseded(prev_ckpt)
-            prev_ckpt = state
+        if (it + 1) % _CKPT_EVERY == 0 and it + 1 < iters:
+            state = prev_ckpt = advance(prev_ckpt, state)
     return state.select("node", "rank_scaled")
 
 
@@ -501,11 +492,11 @@ def bfs_distances(
     BFS. The edge list is persisted once (same rule as pagerank's
     degree index: without it AQE's broadcast build re-derives the whole
     distinct-edge chain per round, which OOM'd the driver at sf0.1);
-    rounds localCheckpoint so the plan stays O(1).
+    rounds checkpoint through ``caching.advance`` so the plan stays O(1).
 
     SINGLE-ACTION CONTRACT (ADVICE r11): the returned frame is a LAZY
     union at the final hop — its last frontier join/anti-join re-executes
-    on every action the caller runs, and the last two rounds' checkpoint
+    on every action the caller runs, and the last round's checkpoint
     blocks stay pinned until the session releases caches. Run exactly one
     materializing action (the registered q_graph_bfs writes once) or
     persist/collect the result yourself before running several; calling
@@ -541,11 +532,7 @@ def bfs_distances(
             # The previous round's blocks stay live until the session
             # releases them (they now back the returned frame).
             return dist.unionByName(new)
-        prev = dist
-        dist = local_checkpoint(dist.unionByName(new), eager=True)
-        # eager checkpoint above materialized the union — the previous
-        # round's blocks are now reader-free (ADVICE r4).
-        release_superseded(prev)
+        dist = advance(dist, dist.unionByName(new))
         # read the new frontier back out of the CHECKPOINTED table —
         # carrying `new` forward would re-derive its whole join chain
         # next round (the checkpoint exists precisely to cut that).

@@ -21,7 +21,7 @@ import random
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import local_checkpoint, release_superseded, track
+from ..caching import advance, track
 from ..catalog import table
 from ..common import det_round, o_det_round, o_vec_ok, spread, vec_ok
 from ..registry import query
@@ -527,53 +527,52 @@ def _argmin_assign(
     )
 
 
+def _lloyd_rounds(
+    frame: DataFrame, cents: DataFrame, vec_col: str, rounds: int, key: str | None = None
+) -> DataFrame:
+    """``rounds`` Lloyd iterations over ``frame``'s ``vec_col`` from the
+    seed ``cents`` (``key``, cell_id, cent), per ``key`` group if given.
+
+    Assignment is :func:`_argmin_assign`. Recompute sums each coordinate
+    as ×1e6 fixed-point integers per (key, cell_id, pos), then sorts the
+    per-pos means back into ``cent``, so centroids are bit-deterministic
+    regardless of partition order. The full data is scanned once per
+    round and shuffled only by (key, cell_id, pos) after map-side partial
+    aggregation. Cells that lose all members drop out (standard Lloyd
+    behavior). Each round's small centroid table goes through
+    ``caching.advance``, so no round re-derives the previous one.
+    """
+    keys = [key] if key else []
+    for _ in range(rounds):
+        ex = _argmin_assign(frame, cents, vec_col, key).select(
+            *keys, F.col("best.cell_id").alias("cell_id"), F.posexplode(vec_col).alias("pos", "v")
+        ).select(
+            *keys, "cell_id", "pos", F.floor(F.col("v").cast("double") * 1_000_000).alias("iv")
+        )
+        dim = ex.groupBy(*keys, "cell_id", "pos").agg(
+            (F.sum("iv").cast("double") / (F.count(F.lit(1)) * 1_000_000.0)).alias("c")
+        )
+        new = (
+            dim.groupBy(*keys, "cell_id")
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
+            .select(*keys, "cell_id", F.transform("pc", lambda s: s.getField("c")).alias("cent"))
+        )
+        cents = advance(cents, new)
+    return cents
+
+
 def kmeans_centroids(e: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     """Distributed Lloyd's k-means for the IVF coarse quantizer:
     (cell_id, cent: array<double>) after ``iters`` assign/recompute rounds
-    from a deterministic seed (the k lowest vec_ids).
-
-    Each round is (1) assignment — map-only via :func:`_argmin_assign`
-    (broadcast the k centroids as ONE array row, ``array_min`` over
-    (d2, cell_id) structs; ties to the lowest cell_id; no shuffle of the
-    data side at all) — and (2) recomputation via the same
-    posexplode + fixed-point-scaled integer sums as q_vector_centroid,
-    so centroids are bit-deterministic regardless of partition order.
-    Per round the full data is scanned once and shuffled only by
-    (cell_id, pos) AFTER map-side partial aggregation collapses it to
-    ≤ k×dims rows per task — the 100 TB-safe shape. Cells that lose all
-    members drop out (standard Lloyd behavior). Each round's index is
-    persisted and the previous round's released; index construction is
-    the offline build stage of IVF, not the query path.
+    (:func:`_lloyd_rounds`) from a deterministic seed (the k lowest
+    vec_ids). Assignment broadcasts the k centroids as ONE array row, so
+    the data side is never shuffled; index construction is the offline
+    build stage of IVF, not the query path.
     """
     cents = e.where(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cell_id"), F.col("embedding").alias("cent")
     )
-    prev = None
-    for _ in range(iters):
-        assigned = _argmin_assign(e, cents, "embedding").select(
-            F.col("best.cell_id").alias("cell_id"), "embedding"
-        )
-        ex = assigned.select(
-            "cell_id", F.posexplode("embedding").alias("pos", "v")
-        ).select(
-            "cell_id", "pos", F.floor(F.col("v").cast("double") * 1_000_000).alias("sv")
-        )
-        dim = ex.groupBy("cell_id", "pos").agg(
-            (F.sum("sv").cast("double") / (F.count(F.lit(1)) * 1_000_000.0)).alias("m")
-        )
-        cents = (
-            dim.groupBy("cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                "cell_id", F.transform("pm", lambda s: s.getField("m")).alias("cent")
-            )
-            .persist()
-        )
-        cents.count()  # materialize this round's index before dropping the last
-        if prev is not None:
-            prev.unpersist()
-        prev = cents
-    return cents
+    return _lloyd_rounds(e, cents, "embedding", iters)
 
 
 @query(
@@ -1120,7 +1119,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
       fixed-point recompute over that frame (2 corpus passes total for
       ALL M codebooks; an earlier per-subspace formulation paid M×2
       sequential rounds — 31 s at sf0.1); the 128-row centroid table is
-      localCheckpoint'd per round to stop plan stacking;
+      checkpointed per round to stop plan stacking;
     - encode: one more broadcast argmin pass → (vec_id, m, code);
     - ADC: the M×K query-to-centroid distance table (128 rows) joins
       the code table on (m, code) and sums per vector — the corpus-side
@@ -1160,54 +1159,20 @@ def ann_pq_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "s.m", "s.sv")
     subs = track(subs)
 
-    def assign(frame, cents):
-        # map-only per-subspace argmin: each row meets its M-keyed
-        # centroid array once via broadcast hash join, no groupBy shuffle
-        return _argmin_assign(frame, cents, "sv", extra_key="m").select(
-            "vec_id", "m", "best", "sv"
-        )
-
     # ---- build: 2 Lloyd rounds over ALL subspaces at once ------------
+    # 128-row centroid table: advance's checkpoint stops each round's
+    # plan from re-deriving the previous round (measured 9 s -> ~2 s
+    # build). r12 A/B at 32 and 8 cores: a lazy checkpoint measured equal
+    # and a track()'d round 2 worse (3.84 vs 3.40 s), so rounds stay eager.
     cents = subs.where(F.col("vec_id") < _PQ_K).select(
         "m", F.col("vec_id").cast("int").alias("cell_id"), F.col("sv").alias("cent")
     )
-    for _ in range(2):
-        assigned = assign(subs, cents).select(
-            "m", F.col("best.cell_id").alias("cell_id"), "sv"
-        )
-        ex = assigned.select(
-            "m", "cell_id", F.posexplode("sv").alias("pos", "v")
-        ).select(
-            "m", "cell_id", "pos",
-            F.floor(F.col("v").cast("double") * 1_000_000).alias("iv"),
-        )
-        dim = ex.groupBy("m", "cell_id", "pos").agg(
-            (F.sum("iv").cast("double") / (F.count(F.lit(1)) * 1_000_000.0)).alias("c")
-        )
-        cents = (
-            dim.groupBy("m", "cell_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-            .select(
-                "m", "cell_id", F.transform("pc", lambda s: s.getField("c")).alias("cent")
-            )
-        )
-        # 128-row table: the checkpoint stops each round's plan from
-        # re-deriving the previous round (measured 9 s -> ~2 s build);
-        # the superseded round's blocks release immediately (ADVICE r4).
-        # r12 re-A/B (VERDICT r11 item 5, lineage-cut variants,
-        # interleaved order-controlled at 32 AND 8 cores): lazy ckpt
-        # (eager=False) measured EQUAL in steady state (3.40 vs 3.42 s,
-        # then 3.98 vs 4.20 with order reversed — drift band); replacing
-        # round-2's ckpt with track() measured worse (3.84), track-both
-        # worse still (4.07). The cold-session spike both shapes show is
-        # SESSION warmup (first heavyweight query pays codegen/broadcast
-        # machinery), not the checkpoints. Eager stays.
-        prev_cents = cents
-        cents = local_checkpoint(cents, eager=True)
-        release_superseded(prev_cents)
+    cents = _lloyd_rounds(subs, cents, "sv", 2, key="m")
 
     # ---- encode: one more broadcast argmin pass ----------------------
-    codes = assign(subs, cents).select(
+    # map-only per-subspace argmin: each row meets its M-keyed centroid
+    # array once via broadcast hash join, no groupBy shuffle
+    codes = _argmin_assign(subs, cents, "sv", extra_key="m").select(
         "vec_id", "m", F.col("best.cell_id").alias("code")
     )
 

@@ -7,9 +7,9 @@ optimizer regression, a lost pushdown, a join strategy flip — shows up
 as a reviewable git diff rather than only a failed property assert.
 
 ``normalized_plan`` strips the run-varying parts (expression ids,
-in-memory relation hashes, scratch-path UUIDs) and keeps everything
-structural: node tree, join strategies, partitioning, PushedFilters,
-ReadSchema. Regenerate with::
+in-memory relation hashes, the scratch root, scratch-path UUIDs) and
+keeps everything structural: node tree, join strategies, partitioning,
+PushedFilters, ReadSchema. Regenerate with::
 
     python -m dateng_data_lakes_apache_spark_spark.plans.snapshot
 
@@ -24,6 +24,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..scratch import SCRATCH
 from .explain import formatted_plan
 
 #: The pinned set (VERDICT r5 item 6 widened it from 20 to the top-cost
@@ -146,10 +147,9 @@ def normalized_plan(df: DataFrame) -> str:
     text = re.sub(r"\bcachedPlan=\S+", "cachedPlan=_", text)
     # scratch staging uses per-run uuids in some writers
     text = re.sub(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "_uuid_", text)
-    # the run-ID scratch root (scratch.SCRATCH, "run-<pid>-<hex>") shows
-    # up in any plan that scans a staged ingest index (r12:
-    # idx_embeddings_valid) — per-process by design, never structural
-    text = re.sub(r"run-\d+-[0-9a-f]+", "run-_", text)
+    # the scratch root shows up in any plan that scans a staged artifact
+    # (idx_embeddings_valid): per-process and per-checkout, never structural
+    text = text.replace(SCRATCH, "_scratch_")
     # drop fully volatile lines (free-memory sizes etc. if present)
     lines = [ln.rstrip() for ln in text.splitlines()]
     return "\n".join(lines).rstrip() + "\n"

@@ -4,7 +4,9 @@ documentation-only persist contract with an explicit release path).
 Index-building queries persist through ``caching.track``; these tests
 prove (1) a multi-query session wrapped in ``cached_indexes()`` ends
 holding none of the storage blocks it created, (2) ``release_caches`` is
-idempotent, and (3) nested scopes release only their own entries.
+idempotent, (3) nested scopes release only their own entries, and (4)
+every iterative operator's rounds (``caching.advance``) hold one round's
+blocks at a time and release with the session.
 Storage checks look only at RDDs new since the test started, so blocks
 another module left behind (e.g. untracked checkpoints the
 ContextCleaner has not yet freed) cannot make a result order-dependent.
@@ -12,14 +14,16 @@ ContextCleaner has not yet freed) cannot make a result order-dependent.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from dateng_data_lakes_apache_spark_spark import cached_indexes, release_caches
+from dateng_data_lakes_apache_spark_spark import caching, cached_indexes, release_caches
 from dateng_data_lakes_apache_spark_spark.caching import (
     reset_session_state,
     track,
     tracked_count,
 )
+from dateng_data_lakes_apache_spark_spark.harness import timed_frame
 from dateng_data_lakes_apache_spark_spark.registry import get_queries
 from dateng_data_lakes_apache_spark_spark.staging import STAGED_BUILDERS
 
@@ -88,57 +92,37 @@ def test_nested_scopes_release_only_their_own(spark, sf_dir):
     assert not cached_rdd_ids(spark) - before
 
 
-def test_release_superseded_exact_object_contract(spark):
-    """ADVICE r5: the checkpoint handle rides on the EXACT frame
-    local_checkpoint returned — a derived frame silently no-ops (and
-    would leak in a loop). Pin the contract both ways, plus released-
-    twice idempotence."""
-    from dateng_data_lakes_apache_spark_spark.caching import (
-        local_checkpoint,
-        release_superseded,
-    )
+def test_advance_holds_only_the_newest_round(spark):
+    """caching.advance: each round checkpoints the new frame and frees the
+    round before it, so after three rounds only the newest checkpoint's
+    RDD holds blocks, and the session release frees that one too."""
+    from dateng_data_lakes_apache_spark_spark.caching import advance
 
-    ck = local_checkpoint(spark.range(100))
-    derived = ck.select("id")
-    assert release_superseded(derived) is False  # no handle on derived frames
-    assert release_superseded(ck) is True
-    assert release_superseded(ck) is False  # already released
-
-
-def test_iterative_loops_release_every_superseded_round(spark, monkeypatch):
-    """ADVICE r5 done-criterion: in a real iterative operator, every
-    release after round 1 must return True (False would mean the loop
-    passed a derived frame and is silently leaking checkpoint blocks).
-
-    q_pagerank's production cadence is ckpt_every=3 (ONE cut per 5
-    rounds — nothing is ever superseded there, r9), so the release path
-    is exercised by running the same loop at ckpt_every=1, which
-    supersedes a checkpoint every round after the first."""
-    import dateng_data_lakes_apache_spark_spark.operators.graph as graph
-    from .conftest import SF_SMALL
-    from dateng_data_lakes_apache_spark_spark.catalog import table
-    from pyspark.sql import functions as F
-
-    returns: list[bool] = []
-    orig = graph.release_superseded
-
-    def spy(df):
-        r = orig(df)
-        returns.append(r)
-        return r
-
-    monkeypatch.setattr(graph, "release_superseded", spy)
-    li = table(spark, SF_SMALL, "lineitem")
-    fwd = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    graph.pagerank(edges, iters=4, ckpt_every=1).collect()
     release_caches()
-    assert returns, "pagerank never called release_superseded"
-    assert all(returns), (
-        "a release returned False mid-loop — superseded checkpoint blocks leaked"
-    )
+    before = cached_rdd_ids(spark)
+    state = spark.range(100)
+    for r in range(3):
+        state = advance(state, state.select((F.col("id") + 1).alias("id")))
+        assert len(cached_rdd_ids(spark) - before) == 1, f"round {r} holds old rounds"
+    newest = caching._checkpoint_rdd(state).id()
+    assert cached_rdd_ids(spark) - before == {newest}
+    assert tracked_count() == 1
+    assert state.agg(F.min("id")).first()[0] == 3
+    assert release_caches() == 1
+    assert not cached_rdd_ids(spark) - before
+
+
+@pytest.mark.parametrize(
+    "name", ["q_dedup_resolve", "q_pagerank", "q_graph_bfs", "q_ann_pq", "q_ann_ivf"]
+)
+def test_iterative_builder_blocks_release_with_the_session(spark, sf_dir, name):
+    """Every iterative operator's rounds are session state: after a build
+    and one action the session holds at most the last round's checkpoint
+    (every superseded round was freed), and release_caches() alone leaves
+    no block the build made (no untracked last round)."""
+    reset_session_state(spark)
+    before = cached_rdd_ids(spark)
+    timed_frame(spark, sf_dir, name).count()
+    assert sum(kind == "rdd" for kind, _ in caching._TRACKED) <= 1
+    release_caches()
+    assert not cached_rdd_ids(spark) - before

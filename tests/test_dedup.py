@@ -157,6 +157,28 @@ def test_connected_components_raises_instead_of_truncating(spark):
     assert {r.label for r in labels} == {0}
 
 
+def test_connected_components_fires_at_most_four_jobs_per_round(spark):
+    """A path of n nodes takes n rounds (n - 1 to settle, one to see no
+    change), so a 20-node chain runs 10 rounds more than a 10-node one.
+    Each round's checkpoint job also answers "converged?" (an
+    Observation on the round's aggregate), so those 10 rounds may cost
+    at most 4 jobs each: no separate convergence job."""
+    from dateng_data_lakes_apache_spark_spark.operators.dedup import (
+        connected_components,
+    )
+
+    from .conftest import jobs_fired
+
+    def chain_jobs(n):
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        return jobs_fired(spark, lambda: connected_components(pairs, max_rounds=64).collect())
+
+    short, long_ = chain_jobs(10), chain_jobs(20)
+    assert long_ - short <= 4 * 10, f"10 extra rounds fired {long_ - short} jobs"
+
+
 def test_dedup_resolve_planted_cluster(spark, sf_dir, monkeypatch):
     from dateng_data_lakes_apache_spark_spark.operators import dedup as dd
 

@@ -73,6 +73,11 @@ _COVERED = [
     "q_similarity_topk",
     "q_pagerank",
     "q_text_stats",
+    # iterative operators: a round's Observation must not block on empty input
+    "q_dedup_resolve",
+    "q_graph_bfs",
+    "q_ann_pq",
+    "q_ann_ivf",
 ]
 
 #: Queries whose kernels/expressions touch the hostile (null / empty

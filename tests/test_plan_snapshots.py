@@ -19,7 +19,9 @@ from dateng_data_lakes_apache_spark_spark.plans.snapshot import (
     SNAPSHOT_QUERIES,
     SNAPSHOT_SF_DIR,
     generate,
+    normalized_plan,
 )
+from dateng_data_lakes_apache_spark_spark.scratch import SCRATCH, SCRATCH_BASE
 
 
 def test_committed_plan_snapshots_match_live_engine(spark):
@@ -37,3 +39,15 @@ def test_committed_plan_snapshots_match_live_engine(spark):
         "`python -m dateng_data_lakes_apache_spark_spark.plans.snapshot` "
         "and review the artifact diff"
     )
+
+
+def test_normalized_plan_hides_the_checkout_path(spark):
+    """A scan of staged bytes names the scratch root, which lives inside
+    the checkout: the normalized plan must not, or the committed
+    snapshots would only match in one directory."""
+    path = os.path.join(SCRATCH, "plan_path_probe")
+    spark.range(3).write.mode("overwrite").parquet(path)
+    text = normalized_plan(spark.read.parquet(path))
+    assert "plan_path_probe" in text
+    assert SCRATCH_BASE not in text
+    assert os.path.dirname(SCRATCH_BASE) not in text
